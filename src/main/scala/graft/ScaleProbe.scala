@@ -1,13 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical scale probe: measure how the heaviest declared queries scale
-  * from sf0.1 to a synthesized `factor`× corpus (default 10×), publishing
-  * per-query scaling exponents — the measurement behind SCALE.md's
-  * "survives 100×" claims (an exponent ≈ 1.0 is linear; the prefix-sum /
-  * LSH / graph / ntile kernels must never read super-linear).
+/** Builder of the scaled corpora behind SCALE.md's scale correctness runs:
+  * a synthesized `factor`× copy of a testdata dir that `Verify` +
+  * `tools/check.py` / `tools/sf1_gate.py` run against.
   *
   * The scaled corpus is KEY-SHIFTED UNION GROWTH, the realistic growth
   * mode for each table family:
@@ -29,231 +29,114 @@ import org.apache.spark.sql.functions._
   *    range (10× density inside the same window — event streams grow in
   *    traffic, not in calendar).
   *
-  * No oracle runs at 10× (DuckDB hashing 6M-row results would dominate);
-  * correctness is pinned at sf0.001/0.01/0.1 by Verify — this probe
-  * measures COST growth only.
-  *
-  * Usage: runMain graft.ScaleProbe [baseDir]
-  *   SPARK_GRAFT_SCALE_DIR    scaled-corpus location (default /tmp/graft_scale10x)
-  *   SPARK_GRAFT_SCALE_FACTOR growth factor (default 10)
-  *   SPARK_GRAFT_SCALE_RUNS   timed runs per query per dir (default 3, median)
-  *   SPARK_GRAFT_SCALE_KEYS   comma-separated query-key override
-  * Writes SCALE_PROBE.json and prints one summary line per query.
+  * Usage: runMain graft.ScaleProbe <baseDir> <outDir> <factor>
   */
 object ScaleProbe {
 
-  /** The probe set: the heaviest bench queries plus one representative
-    * per kernel family whose 100 TB claim SCALE.md argues (distributed
-    * prefix-sum/ntile, distributed rank/corr, MinHash-LSH + connected
-    * components, blocked similarity, iterative graph, C4 line dedup,
-    * join-heavy analytics, sessionization). */
-  val defaultKeys: Seq[String] = Seq(
-    // distributed prefix-sum / ntile kernels
-    "agg_weighted_median_by_group", "encode_quantile_binning",
-    "analytics_rfm_segments", "analytics_customer_migration",
-    "analytics_abc_classification", "profile_lorenz_deciles",
-    "analytics_pareto_curve", "window_ntile_percent_distributed",
-    // distributed rank / moment kernels
-    "profile_spearman_corr", "profile_corr_matrix",
-    // MinHash-LSH / dedup family
-    "dedup_minhash", "dedup_keep_canonical", "dedup_cluster_cc",
-    "dedup_recall_eval", "dedup_soft_upweight", "text_line_dedup",
-    // text / corpus curation
-    "text_source_ngram_overlap", "text_tfidf_cosine_pairs",
-    "text_decontaminate_bloom", "text_perplexity_band_filter",
-    "text_lm_bigram_score",
-    // iterative graph
-    "graph_kcore", "graph_pagerank", "graph_association_rules",
-    // blocked embedding similarity
-    "dedup_semantic_clustered", "sim_centroid_drift",
-    // join-heavy analytics + events
-    "analytics_market_share", "join_star_denormalize",
-    "analytics_large_orders", "events_sessionize",
-    // round-11 operators
-    "text_substr_dedup", "text_substr_dup_profile",
-    "pipeline_text_cleaning_funnel", "profile_quantile_sketch_rank",
-    "profile_quantile_sketch_rank_by_group", "profile_key_concentration",
-    "stream_key_skew_monitor", "dedup_substr_recall_eval",
-    // round-12 operators (privacy trio, curriculum/census, burstiness,
-    // affinity, modularity, multi-lag ACF)
-    "profile_k_anonymity", "profile_l_diversity", "profile_t_closeness",
-    "encode_frequency", "timeseries_acf_lags",
-    "events_inter_arrival_burstiness", "pipeline_curriculum_stages",
-    "text_length_histogram_by_source", "text_char_trigram_entropy",
-    "events_type_affinity_jaccard", "graph_modularity_partition",
-    "agg_percentile_cont_by_group", "sample_stratified_neyman",
-    // round-13 operators (Extras41)
-    "graph_adamic_adar", "encode_target_loo",
-    "profile_functional_dependencies", "stats_cramers_v_matrix",
-    "stats_split_gain", "stats_theil_sen_by_group",
-    "sample_balanced_downsample", "agg_incremental_maintenance",
-    "stats_kendall_tau_by_group", "encode_target_james_stein",
-    "events_dau_mau_stickiness", "graph_degree_powerlaw_fit",
-    // round-14 rework (distributed-lag events_sequence_pairs)
-    "events_sequence_pairs",
-    // round-14 operators (Extras43) with real fact-scaling surface
-    "timeseries_rolling_corr", "timeseries_realized_volatility",
-    "analytics_order_fill_rate", "clean_winsorize",
-    "stats_psi_by_group", "graph_bipartite_projection",
-    "events_transition_entropy_rate", "analytics_seasonal_index",
-    // round-14 batch 2 (Extras44 + dedup_band_bucket_stats)
-    "stats_auc_roc", "analytics_cross_sell_lift",
-    "sample_importance_weighted", "timeseries_week_over_week_growth",
-    "dedup_band_bucket_stats",
-    // round-14 batch 3 (Extras45)
-    "events_growth_accounting", "graph_component_sizes",
-    "stats_wilcoxon_signed_rank",
-    // round-14 batch 4 (Extras46)
-    "analytics_pareto_frontier", "events_poisson_rate_test")
-
   def main(args: Array[String]): Unit = {
-    val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val scaledDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale10x")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SCALE_RUNS", "3").toInt
-    val keys = sys.env.get("SPARK_GRAFT_SCALE_KEYS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(defaultKeys)
+    if (args.length != 3) {
+      System.err.println("usage: graft.ScaleProbe <baseDir> <outDir> <factor>")
+      sys.exit(2)
+    }
+    val spark = session()
+    try buildIfAbsent(spark, args(0), args(1), args(2).toInt)
+    finally spark.stop()
+  }
+
+  /** Local session for the corpus builder mains. */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    buildIfAbsent(spark, baseDir, scaledDir, factor)
-
-    // warmup both dirs (footer/page-cache/JIT outside the timings)
-    Seq(baseDir, scaledDir).foreach { d =>
-      try spark.read.parquet(s"$d/lineitem.parquet")
-        .groupBy("l_returnflag").count().count()
-      catch { case _: Throwable => }
-      try spark.read.parquet(s"$d/documents.parquet").count()
-      catch { case _: Throwable => }
-    }
-
-    def timeMedian(fn: Q, dir: String): Double = {
-      val ts = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(ts.length / 2)
-    }
-
-    val rows = keys.flatMap { k =>
-      SparkEntry.queries.get(k) match {
-        case None =>
-          System.err.println(s"[scale] unknown query key: $k"); None
-        case Some(fn) =>
-          try {
-            val tBase = timeMedian(fn, baseDir)
-            val tScaled = timeMedian(fn, scaledDir)
-            val exp = math.log(tScaled / tBase) / math.log(factor.toDouble)
-            val line = s"""{"query":${js(k)},"base_s":${num(tBase)},""" +
-              s""""scaled_s":${num(tScaled)},"exponent":${num(exp)}}"""
-            System.err.println(s"[scale] $k base=${num(tBase)}s " +
-              s"x$factor=${num(tScaled)}s exp=${num(exp)}")
-            Some(line)
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[scale] $k FAILED: ${e.getMessage}")
-              Some(s"""{"query":${js(k)},"error":${js(String.valueOf(e.getMessage))}}""")
-          }
-      }
-    }
-    val out = s"""{"factor":$factor,"runs":$runs,"base_dir":${js(baseDir)},""" +
-      s""""scaled_dir":${js(scaledDir)},"results":[${rows.mkString(",")}]}"""
-    // deep-factor follow-ups write beside the canonical 10x artifact
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_PROBE.json")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outPath), out.getBytes("UTF-8"))
-    try GraftOps.clearDedupCaches(spark) catch { case _: Throwable => }
-    try GraftOps.clearGraphCaches(spark) catch { case _: Throwable => }
-    spark.stop()
-    println(out.take(400))
+    spark
   }
 
-  // locale-safe number rendering (never f"" — comma decimals corrupt JSON)
-  private def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null"
-    else (math.round(d * 1000) / 1000.0).toString
-  private def js(s: String): String =
-    "\"" + s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** The record a finished build left in `dir`'s `sentinel`, if any. */
+  private[graft] def stampOf(dir: String, sentinel: String): Option[String] = {
+    val p = Paths.get(dir, sentinel)
+    if (Files.exists(p)) Some(new String(Files.readAllBytes(p), "UTF-8")) else None
+  }
 
-  /** Synthesize the key-shifted `factor`× corpus at `out` if absent. */
-  def buildIfAbsent(spark: SparkSession, base: String, out: String,
-      factor: Int): Unit = {
-    val done = new java.io.File(s"$out/_GRAFT_SCALE_OK")
-    if (done.exists()) { System.err.println(s"[scale] reusing $out"); return }
-    System.err.println(s"[scale] building ${factor}x corpus at $out ...")
+  /** Run `build` into `out` unless `out`'s sentinel already records
+    * `stamp`. A sentinel from another build (other factor or base) is
+    * removed first, so a build that dies midway never leaves one behind. */
+  private[graft] def buildUnlessStamped(out: String, sentinel: String,
+      stamp: String)(build: => Unit): Unit = {
+    if (stampOf(out, sentinel).contains(stamp)) {
+      System.err.println(s"[corpus] reusing $out ($stamp)")
+      return
+    }
+    val done = Paths.get(out, sentinel)
+    Files.deleteIfExists(done)
+    System.err.println(s"[corpus] building $out ($stamp) ...")
     val t0 = System.nanoTime()
-    def read(t: String) = spark.read.parquet(s"$base/$t.parquet")
-    def maxPlus1(t: String, c: String): Long =
-      // schema-width tolerant: testdata may write int32 keys
-      read(t).agg(max(col(c))).head().getAs[Number](0).longValue() + 1L
-    val so = maxPlus1("orders", "o_orderkey")
-    val sc = maxPlus1("customer", "c_custkey")
-    val sp = maxPlus1("part", "p_partkey")
-    val ss = maxPlus1("supplier", "s_suppkey")
-    val se = maxPlus1("events", "event_id")
-    val su = maxPlus1("events", "user_id")
-    val sd = maxPlus1("documents", "doc_id")
-    val sv = maxPlus1("embeddings", "vec_id")
-
-    def writeCopies(t: String)(f: (DataFrame, Int) => DataFrame): Unit = {
-      val b = if (t == "events") Tables(spark, base, t) else read(t)
-      (0 until factor).map(k => f(b, k)).reduce(_ unionAll _)
-        .write.mode("overwrite").parquet(s"$out/$t.parquet")
-      System.err.println(s"[scale]   wrote $t")
-    }
-    // true dimensions: fixed cardinality at any scale
-    Seq("region", "nation").foreach { t =>
-      read(t).write.mode("overwrite").parquet(s"$out/$t.parquet")
-    }
-    writeCopies("customer")((d, k) =>
-      d.withColumn("c_custkey", col("c_custkey") + lit(k * sc)))
-    writeCopies("supplier")((d, k) =>
-      d.withColumn("s_suppkey", col("s_suppkey") + lit(k * ss)))
-    writeCopies("part")((d, k) =>
-      d.withColumn("p_partkey", col("p_partkey") + lit(k * sp)))
-    writeCopies("orders")((d, k) => d
-      .withColumn("o_orderkey", col("o_orderkey") + lit(k * so))
-      .withColumn("o_custkey", col("o_custkey") + lit(k * sc)))
-    writeCopies("lineitem")((d, k) => d
-      .withColumn("l_orderkey", col("l_orderkey") + lit(k * so))
-      .withColumn("l_partkey", col("l_partkey") + lit(k * sp))
-      .withColumn("l_suppkey", col("l_suppkey") + lit(k * ss)))
-    writeCopies("events")((d, k) => d
-      .withColumn("event_id", col("event_id") + lit(k * se))
-      .withColumn("user_id", col("user_id") + lit(k * su)))
-    // per-copy word salt → cross-copy shingle overlap ~0 (see scaladoc)
-    writeCopies("documents")((d, k) => {
-      val salted = if (k == 0) col("text")
-        else regexp_replace(col("text"), "(^|\\s)", "$1c" + k + "z")
-      d.withColumn("doc_id", col("doc_id") + lit(k * sd))
-        .withColumn("text", salted)
-        .withColumn("n_chars", length(col("text")).cast("long"))
-    })
-    writeCopies("embeddings")((d, k) => d
-      .withColumn("vec_id", col("vec_id") + lit(k * sv))
-      .withColumn("label", col("label") + lit(k * 1000))
-      .withColumn("embedding", expr(
-        s"transform(embedding, (x, i) -> IF(i = 0, cast(x + $k * 1.0E-4 AS float), x))")))
-    done.getParentFile.mkdirs()
-    java.nio.file.Files.write(done.toPath,
-      s"factor=$factor base=$base".getBytes("UTF-8"))
-    System.err.println(s"[scale] corpus built in ${num((System.nanoTime() - t0) / 1e9)}s")
+    build
+    Files.createDirectories(done.getParent)
+    Files.write(done, stamp.getBytes("UTF-8"))
+    System.err.println(s"[corpus] built in ${(System.nanoTime() - t0) / 1000000000L}s")
   }
+
+  /** Synthesize the key-shifted `factor`× corpus of `base` at `out`,
+    * unless `out` already holds exactly that corpus. */
+  def buildIfAbsent(spark: SparkSession, base: String, out: String,
+      factor: Int): Unit =
+    buildUnlessStamped(out, "_GRAFT_SCALE_OK", s"factor=$factor base=$base") {
+      def read(t: String) = spark.read.parquet(s"$base/$t.parquet")
+      def maxPlus1(t: String, c: String): Long =
+        // schema-width tolerant: testdata may write int32 keys
+        read(t).agg(max(col(c))).head().getAs[Number](0).longValue() + 1L
+      val so = maxPlus1("orders", "o_orderkey")
+      val sc = maxPlus1("customer", "c_custkey")
+      val sp = maxPlus1("part", "p_partkey")
+      val ss = maxPlus1("supplier", "s_suppkey")
+      val se = maxPlus1("events", "event_id")
+      val su = maxPlus1("events", "user_id")
+      val sd = maxPlus1("documents", "doc_id")
+      val sv = maxPlus1("embeddings", "vec_id")
+
+      def writeCopies(t: String)(f: (DataFrame, Int) => DataFrame): Unit = {
+        val b = if (t == "events") Tables(spark, base, t) else read(t)
+        (0 until factor).map(k => f(b, k)).reduce(_ unionAll _)
+          .write.mode("overwrite").parquet(s"$out/$t.parquet")
+        System.err.println(s"[corpus]   wrote $t")
+      }
+      // true dimensions: fixed cardinality at any scale
+      Seq("region", "nation").foreach { t =>
+        read(t).write.mode("overwrite").parquet(s"$out/$t.parquet")
+      }
+      writeCopies("customer")((d, k) =>
+        d.withColumn("c_custkey", col("c_custkey") + lit(k * sc)))
+      writeCopies("supplier")((d, k) =>
+        d.withColumn("s_suppkey", col("s_suppkey") + lit(k * ss)))
+      writeCopies("part")((d, k) =>
+        d.withColumn("p_partkey", col("p_partkey") + lit(k * sp)))
+      writeCopies("orders")((d, k) => d
+        .withColumn("o_orderkey", col("o_orderkey") + lit(k * so))
+        .withColumn("o_custkey", col("o_custkey") + lit(k * sc)))
+      writeCopies("lineitem")((d, k) => d
+        .withColumn("l_orderkey", col("l_orderkey") + lit(k * so))
+        .withColumn("l_partkey", col("l_partkey") + lit(k * sp))
+        .withColumn("l_suppkey", col("l_suppkey") + lit(k * ss)))
+      writeCopies("events")((d, k) => d
+        .withColumn("event_id", col("event_id") + lit(k * se))
+        .withColumn("user_id", col("user_id") + lit(k * su)))
+      // per-copy word salt → cross-copy shingle overlap ~0 (see scaladoc)
+      writeCopies("documents")((d, k) => {
+        val salted = if (k == 0) col("text")
+          else regexp_replace(col("text"), "(^|\\s)", "$1c" + k + "z")
+        d.withColumn("doc_id", col("doc_id") + lit(k * sd))
+          .withColumn("text", salted)
+          .withColumn("n_chars", length(col("text")).cast("long"))
+      })
+      writeCopies("embeddings")((d, k) => d
+        .withColumn("vec_id", col("vec_id") + lit(k * sv))
+        .withColumn("label", col("label") + lit(k * 1000))
+        .withColumn("embedding", expr(
+          s"transform(embedding, (x, i) -> IF(i = 0, cast(x + $k * 1.0E-4 AS float), x))")))
+    }
 }

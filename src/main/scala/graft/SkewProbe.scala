@@ -3,19 +3,19 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical SKEW probe: the scale dimension [[ScaleProbe]] cannot see.
+/** Builder of the hot-key corpus: the scale dimension [[ScaleProbe]]'s
+  * corpora cannot show.
   *
   * ScaleProbe grows VOLUME with per-key densities unchanged; a 100 TB
   * corpus also has hot keys — one user owning a visible share of events,
   * one orderkey owning a visible share of lineitem, one near-duplicate
-  * cluster owning most LSH candidate pairs. This probe holds volume FIXED
-  * (the 10x ScaleProbe corpus) and re-distributes key mass, then measures
-  * the shuffle-heaviest keyed kernels base-vs-hot:
+  * cluster owning most LSH candidate pairs. This builder holds volume
+  * FIXED (typically the 10× ScaleProbe corpus) and re-distributes key mass:
   *
   *  - events: one existing user takes every `event_id % 10 == 0` row
   *    (~10% of all events in one `partitionBy(user_id)` partition);
   *  - lineitem: one existing orderkey takes every `l_orderkey % 10 == 0`
-  *    order's lines (~10% of a 6M-row fact behind one join/groupBy key);
+  *    order's lines (~10% of the fact behind one join/groupBy key);
   *  - orders: one existing customer takes ~10% of orders;
   *  - documents: 1% of docs become near-duplicates of one template
   *    (shared shingles + a unique tail) — one LSH band bucket owning the
@@ -24,286 +24,65 @@ import org.apache.spark.sql.functions._
   *  - embeddings: one label absorbs ~10% of vectors (hot cluster for the
   *    label-blocked similarity kernels).
   *
-  * Two artifacts per query: the wall-time ratio hot/base at equal volume
-  * (bounded degradation = the kernel's per-key state or AQE protects it;
-  * super-linear blowup = a rewrite is owed) and whether AQE's skew-join
-  * split engaged (`skew=true` in the final adaptive plan). Because the
-  * local 10x corpus is ~5 orders of magnitude below production, the AQE
-  * skew thresholds are scaled DOWN proportionally for the probe session
-  * (factor 2, 256 KiB threshold, 64 KiB advisory target vs the 5x /
-  * 256 MiB / 64 MiB defaults a real cluster would keep) — the probe
-  * asserts the PLAN SHAPE lets ambient AQE engage, not the absolute byte
-  * thresholds. Detection wraps each query in a global count over the SAME
-  * QueryExecution (`df.count()` builds a fresh one whose adaptive plan is
-  * never executed — inspecting it reads `isFinalPlan=false` vacuously).
-  *
-  * A dedicated fact-fact sort-merge-join demo (lineitem x orders with
-  * broadcast disabled) pins the headline: no skew split on the uniform
-  * corpus, split engages on the hot corpus.
-  *
-  * Usage: runMain graft.SkewProbe [scaledBaseDir]
-  *   SPARK_GRAFT_SKEW_DIR   hot-corpus location (default /tmp/graft_skew10x)
-  *   SPARK_GRAFT_SKEW_RUNS  timed runs per query per dir (default 3, median)
-  *   SPARK_GRAFT_SKEW_KEYS  comma-separated query-key override
-  * Writes SKEW_PROBE.json; one summary line per query on stderr.
+  * Usage: runMain graft.SkewProbe <baseDir> <outDir>
+  *   (build a scaled `baseDir` first with graft.ScaleProbe)
   */
 object SkewProbe {
 
-  /** Probe set: every kernel family that shuffles on a plantable hot key,
-    * tagged with the skew dimension it stresses. */
-  val defaultKeys: Seq[(String, String)] = Seq(
-    // user_id-grain windows / sessionization over events
-    "events_sessionize" -> "hot_user",
-    "window_gaps_islands" -> "hot_user",
-    "events_funnel" -> "hot_user",
-    "events_attribution" -> "hot_user",
-    "events_decay_score" -> "hot_user",
-    "events_sequence_pairs" -> "hot_user",
-    "events_transition_entropy_rate" -> "hot_user",
-    "events_burst_days" -> "hot_user",
-    "window_streak_longest" -> "hot_user",
-    // l_orderkey-grain joins / aggregates over lineitem
-    "analytics_large_orders" -> "hot_orderkey",
-    "analytics_waiting_suppliers" -> "hot_orderkey",
-    "join_star_denormalize" -> "hot_orderkey",
-    "analytics_basket_profile" -> "hot_orderkey",
-    "graph_pagerank" -> "hot_orderkey",
-    "graph_kcore" -> "hot_orderkey",
-    // o_custkey-grain customer analytics
-    "analytics_rfm_segments" -> "hot_custkey",
-    "analytics_cohort_ltv" -> "hot_custkey",
-    "analytics_lapsed_customers" -> "hot_custkey",
-    // hot LSH bucket / duplicate-block text
-    "dedup_minhash" -> "hot_lsh_bucket",
-    "dedup_cluster_cc" -> "hot_lsh_bucket",
-    "dedup_keep_canonical" -> "hot_lsh_bucket",
-    "text_line_dedup" -> "hot_dup_blocks",
-    // hot embedding cluster
-    "sim_label_centroids" -> "hot_label",
-    "dedup_semantic_clustered" -> "hot_label",
-    // round-11 additions: the reworked prefix-filtered cosine pairs (the
-    // hot LSH bucket's 500 template docs share words, so its candidate
-    // stage is the stress), the exact-substring family (hot duplicate
-    // blocks multiply seed-group sizes), and the new monitors
-    "text_tfidf_cosine_pairs" -> "hot_lsh_bucket",
-    "text_substr_dedup" -> "hot_dup_blocks",
-    "text_substr_dup_profile" -> "hot_dup_blocks",
-    "stream_key_skew_monitor" -> "hot_user",
-    // the pre-flight diagnostics a pipeline runs before the joins above
-    "profile_key_concentration" -> "diagnostic",
-    "profile_join_key_skew" -> "diagnostic",
-    // round-12 additions: the burstiness window sorts the hot user's
-    // ~10% event share in ONE partition (the inherent per-key-sequence
-    // shape — measure, don't assume); the affinity self-join keys on
-    // user_id but distinct (type,user) caps the hot user's fan-out at
-    // |types|²; modularity shuffles the hot orderkey's capped basket
-    "events_inter_arrival_burstiness" -> "hot_user",
-    "events_type_affinity_jaccard" -> "hot_user",
-    "graph_modularity_partition" -> "hot_orderkey",
-    // round-13 additions (r12 verdict #5): the TPC-H analytics join
-    // graphs had never seen a planted hot key — Q10/Q3/Q4/Q9/Q8 shapes
-    // shuffle lineitem on l_orderkey (the ~10% hot order), Q13 joins
-    // orders on o_custkey (the ~10% hot customer); Q18/Q21 shapes were
-    // already covered above (analytics_large_orders /
-    // analytics_waiting_suppliers)
-    "analytics_returned_items" -> "hot_orderkey",
-    "analytics_shipping_priority" -> "hot_orderkey",
-    "analytics_order_priority_check" -> "hot_orderkey",
-    "analytics_product_profit" -> "hot_orderkey",
-    "analytics_market_share" -> "hot_orderkey",
-    "analytics_customer_distribution" -> "hot_custkey",
-    // round-13 operators: Adamic-Adar rides the basket build (MaxBasket
-    // caps the hot orderkey before pair expansion — same contract as
-    // kcore/pagerank); Theil-Sen joins orders on the hot o_custkey
-    // before the month-grain reduction
-    "graph_adamic_adar" -> "hot_orderkey",
-    "stats_theil_sen_by_group" -> "hot_custkey")
-
   def main(args: Array[String]): Unit = {
-    val baseDir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale10x"))
-    val hotDir = sys.env.getOrElse("SPARK_GRAFT_SKEW_DIR", "/tmp/graft_skew10x")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_SKEW_RUNS", "3").toInt
-    val keys = sys.env.get("SPARK_GRAFT_SKEW_KEYS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        .map(k => k -> defaultKeys.toMap.getOrElse(k, "custom")))
-      .getOrElse(defaultKeys)
-    // 32 threads: skew only becomes the critical path when per-core share
-    // drops below the hot key's share (at 4 cores a 10% key hides inside
-    // the 25% per-core budget — the driver's cpus=32 is the honest shape)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // production-relative skew thresholds at local scale (see scaladoc)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256k")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64k")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // base 10x corpus must exist (built by ScaleProbe's generator)
-    ScaleProbe.buildIfAbsent(spark, "/root/testdata/sf0.1", baseDir, 10)
-    buildHotIfAbsent(spark, baseDir, hotDir)
-
-    Seq(baseDir, hotDir).foreach { d =>
-      try spark.read.parquet(s"$d/lineitem.parquet")
-        .groupBy("l_returnflag").count().count()
-      catch { case _: Throwable => }
-      try spark.read.parquet(s"$d/documents.parquet").count()
-      catch { case _: Throwable => }
+    if (args.length != 2) {
+      System.err.println("usage: graft.SkewProbe <baseDir> <outDir>")
+      sys.exit(2)
     }
-
-    /** median wall time + whether the final adaptive plan skew-split. */
-    def probe(fn: Q, dir: String): (Double, Boolean) = {
-      var split = false
-      val ts = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        // same shape Dataset.count() builds, but on a QueryExecution we
-        // keep: the executed adaptive plan carries the skew markers
-        val agg = fn(spark, dir).groupBy().count()
-        agg.collect()
-        split ||= agg.queryExecution.executedPlan.toString.contains("skew=true")
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (ts(ts.length / 2), split)
-    }
-
-    val rows = keys.flatMap { case (k, dim) =>
-      SparkEntry.queries.get(k) match {
-        case None =>
-          System.err.println(s"[skew] unknown query key: $k"); None
-        case Some(fn) =>
-          try {
-            val (tBase, splitBase) = probe(fn, baseDir)
-            val (tHot, splitHot) = probe(fn, hotDir)
-            val ratio = tHot / tBase
-            System.err.println(s"[skew] $k [$dim] base=${num(tBase)}s " +
-              s"hot=${num(tHot)}s ratio=${num(ratio)}" +
-              (if (splitHot) " AQE-SKEW-SPLIT" else ""))
-            Some(s"""{"query":${js(k)},"dim":${js(dim)},""" +
-              s""""base_s":${num(tBase)},"hot_s":${num(tHot)},""" +
-              s""""ratio":${num(ratio)},"skew_split_base":$splitBase,""" +
-              s""""skew_split_hot":$splitHot}""")
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[skew] $k FAILED: ${e.getMessage}")
-              Some(s"""{"query":${js(k)},"dim":${js(dim)},""" +
-                s""""error":${js(String.valueOf(e.getMessage))}}""")
-          }
-      }
-    }
-
-    // headline demo: fact-fact SMJ, broadcast off — skew split must stay
-    // OFF on the uniform corpus and engage on the hot one
-    val demo = {
-      def run(dir: String): (Double, Boolean) = {
-        val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
-          val li = spark.read.parquet(s"$dir/lineitem.parquet")
-          val o = spark.read.parquet(s"$dir/orders.parquet")
-          val j = li.join(o, li("l_orderkey") === o("o_orderkey"))
-            .groupBy("o_orderpriority")
-            .agg(sum(col("l_extendedprice").cast("decimal(18,4)")).as("rev"))
-          // fresh QueryExecution per run — re-collecting one QE would
-          // reuse its materialized AQE stages and time ~nothing
-          var split = false
-          val ts = (1 to runs).map { _ =>
-            val agg = j.groupBy().count()
-            val t0 = System.nanoTime(); agg.collect()
-            split ||= agg.queryExecution.executedPlan.toString.contains("skew=true")
-            (System.nanoTime() - t0) / 1e9
-          }.sorted
-          (ts(ts.length / 2), split)
-        } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      }
-      val (tb, sb) = run(baseDir)
-      val (th, sh) = run(hotDir)
-      System.err.println(s"[skew] smj_demo base=${num(tb)}s(split=$sb) " +
-        s"hot=${num(th)}s(split=$sh)")
-      s"""{"base_s":${num(tb)},"hot_s":${num(th)},"ratio":${num(th / tb)},""" +
-        s""""skew_split_base":$sb,"skew_split_hot":$sh}"""
-    }
-
-    val out = s"""{"base_dir":${js(baseDir)},"hot_dir":${js(hotDir)},""" +
-      s""""runs":$runs,"cpus":$cpus,""" +
-      s""""hot_spec":{"events":"user_id := min for event_id%10=0 (~10%)",""" +
-      s""""lineitem":"l_orderkey := min for l_orderkey%10=0 (~10%)",""" +
-      s""""orders":"o_custkey := min for o_orderkey%10=0 (~10%)",""" +
-      s""""documents":"1% near-dups of one template (hot LSH bucket)",""" +
-      s""""embeddings":"label := min for vec_id%10=0 (~10%)"},""" +
-      s""""smj_demo":$demo,"results":[${rows.mkString(",")}]}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("SKEW_PROBE.json"), out.getBytes("UTF-8"))
-    try GraftOps.clearDedupCaches(spark) catch { case _: Throwable => }
-    try GraftOps.clearGraphCaches(spark) catch { case _: Throwable => }
-    spark.stop()
-    println(out.take(400))
+    val spark = ScaleProbe.session()
+    try buildHotIfAbsent(spark, args(0), args(1))
+    finally spark.stop()
   }
 
-  private def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null"
-    else (math.round(d * 1000) / 1000.0).toString
-  private def js(s: String): String =
-    "\"" + s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  /** Re-key the scaled corpus so each skew dimension has one hot key;
-    * volume, schemas, and all non-skewed tables are unchanged. */
+  /** Re-key `base` into `out` so each skew dimension has one hot key;
+    * volume, schemas, and all non-skewed tables are unchanged. Reuses
+    * `out` only when it was built from the same `base` and, for a scaled
+    * base, from the same ScaleProbe build of it. */
   def buildHotIfAbsent(spark: SparkSession, base: String, out: String): Unit = {
-    val done = new java.io.File(s"$out/_GRAFT_SKEW_OK")
-    if (done.exists()) { System.err.println(s"[skew] reusing $out"); return }
-    System.err.println(s"[skew] building hot-key corpus at $out ...")
-    val t0 = System.nanoTime()
-    def read(t: String) = spark.read.parquet(s"$base/$t.parquet")
-    def minKey(t: String, c: String): Long =
-      read(t).agg(min(col(c))).head().getAs[Number](0).longValue()
-    def write(t: String)(df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"$out/$t.parquet")
-      System.err.println(s"[skew]   wrote $t")
+    val stamp = s"base=$base" +
+      ScaleProbe.stampOf(base, "_GRAFT_SCALE_OK").fold("")(b => s" ($b)")
+    ScaleProbe.buildUnlessStamped(out, "_GRAFT_SKEW_OK", stamp) {
+      def read(t: String) = spark.read.parquet(s"$base/$t.parquet")
+      def minKey(t: String, c: String): Long =
+        read(t).agg(min(col(c))).head().getAs[Number](0).longValue()
+      def write(t: String)(df: DataFrame): Unit = {
+        df.write.mode("overwrite").parquet(s"$out/$t.parquet")
+        System.err.println(s"[corpus]   wrote $t")
+      }
+      // unskewed tables: copy as-is so the two dirs differ ONLY in key mass
+      Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
+        write(t)(read(t))
+      }
+      val hotUser = minKey("events", "user_id")
+      write("events")(read("events").withColumn("user_id",
+        when(pmod(col("event_id"), lit(10L)) === 0L, lit(hotUser))
+          .otherwise(col("user_id"))))
+      val hotOrder = minKey("orders", "o_orderkey")
+      write("lineitem")(read("lineitem").withColumn("l_orderkey",
+        when(pmod(col("l_orderkey"), lit(10L)) === 0L, lit(hotOrder))
+          .otherwise(col("l_orderkey"))))
+      val hotCust = minKey("customer", "c_custkey")
+      write("orders")(read("orders").withColumn("o_custkey",
+        when(pmod(col("o_orderkey"), lit(10L)) === 0L, lit(hotCust))
+          .otherwise(col("o_custkey"))))
+      // 1% of docs: shared 150-word template + unique tail → one LSH band
+      // bucket holds ~C(n/100, 2) candidate pairs, dwarfing organic pairs
+      val template = (0 until 150).map(j => s"dupword$j").mkString(" ")
+      write("documents")(read("documents")
+        .withColumn("text",
+          when(pmod(col("doc_id"), lit(100L)) === 0L,
+            concat(lit(template), lit(" uniq"), col("doc_id").cast("string")))
+            .otherwise(col("text")))
+        .withColumn("n_chars", length(col("text")).cast("long")))
+      val hotLabel = minKey("embeddings", "label")
+      write("embeddings")(read("embeddings").withColumn("label",
+        when(pmod(col("vec_id"), lit(10L)) === 0L, lit(hotLabel).cast("int"))
+          .otherwise(col("label"))))
     }
-    // unskewed tables: copy as-is so the two dirs differ ONLY in key mass
-    Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
-      write(t)(read(t))
-    }
-    val hotUser = minKey("events", "user_id")
-    write("events")(read("events").withColumn("user_id",
-      when(pmod(col("event_id"), lit(10L)) === 0L, lit(hotUser))
-        .otherwise(col("user_id"))))
-    val hotOrder = minKey("orders", "o_orderkey")
-    write("lineitem")(read("lineitem").withColumn("l_orderkey",
-      when(pmod(col("l_orderkey"), lit(10L)) === 0L, lit(hotOrder))
-        .otherwise(col("l_orderkey"))))
-    val hotCust = minKey("customer", "c_custkey")
-    write("orders")(read("orders").withColumn("o_custkey",
-      when(pmod(col("o_orderkey"), lit(10L)) === 0L, lit(hotCust))
-        .otherwise(col("o_custkey"))))
-    // 1% of docs: shared 150-word template + unique tail → one LSH band
-    // bucket holds ~C(n/100, 2) candidate pairs, dwarfing organic pairs
-    val template = (0 until 150).map(j => s"dupword$j").mkString(" ")
-    write("documents")(read("documents")
-      .withColumn("text",
-        when(pmod(col("doc_id"), lit(100L)) === 0L,
-          concat(lit(template), lit(" uniq"), col("doc_id").cast("string")))
-          .otherwise(col("text")))
-      .withColumn("n_chars", length(col("text")).cast("long")))
-    val hotLabel = minKey("embeddings", "label")
-    write("embeddings")(read("embeddings").withColumn("label",
-      when(pmod(col("vec_id"), lit(10L)) === 0L, lit(hotLabel).cast("int"))
-        .otherwise(col("label"))))
-    done.getParentFile.mkdirs()
-    java.nio.file.Files.write(done.toPath, s"base=$base".getBytes("UTF-8"))
-    System.err.println(s"[skew] corpus built in ${num((System.nanoTime() - t0) / 1e9)}s")
   }
 }

@@ -103,7 +103,7 @@ object Tables {
 
   /** THE scratch-path convention: gitignored, per-(kind, sf-dir, JVM) so
     * runs against different scale factors never clobber each other AND two
-    * concurrent JVMs against the same repo (e.g. a Verify racing a Bench)
+    * concurrent JVMs against the same repo (e.g. a Verify racing an sbt test run)
     * never overwrite under each other's reads — the bucketed-table catalog
     * check is JVM-local, so without the pid key each process saw "table
     * missing" and raced the rewrite. Every query that writes a layout

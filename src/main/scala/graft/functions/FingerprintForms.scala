@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   *    is assumed non-deterministic-safe only with extra annotation.
   *  - oracle parity: each built-in has a DuckDB mirror; a UDF's Scala body
   *    has to be re-proved by hand.
-  *  - NOT raw per-row speed, on this shape: FingerprintAbBench measured
-  *    the UDF ~1.37× FASTER at sf0.1 (udf/expr ≈ 0.73, stable across
-  *    runs) — a 7-built-in string/array chain materializes an
-  *    intermediate per step (and RegExpReplace round-trips
+  *  - NOT raw per-row speed, on this shape: an interleaved A/B measured
+  *    the UDF marginally FASTER at sf0.1 (expression 0.39 s, UDF 0.36 s,
+  *    udf/expr ≈ 0.93; SCALE.md §2.14) — a 7-built-in string/array chain
+  *    materializes an intermediate per step (and RegExpReplace round-trips
   *    UTF8String→String internally anyway), while the UDF pays ONE
   *    boundary crossing and runs one tight JIT'd pass. The policy's win
   *    is plan transparency, and per-row cost must be MEASURED per shape —

@@ -69,23 +69,8 @@ object Dedup {
   private def docArrays(s: SparkSession, dir: String, dedup: Boolean = false): DataFrame =
     shingleArrays(Tables(s, dir, "documents"), "doc_id", "text", 3, dedup)
 
-  /** Every relation Dedup persists is registered here per session, so a
-    * long-lived service can reclaim them all with [[clearCaches]] instead
-    * of waiting on LRU pressure. */
-  private val persistedBySession =
-    scala.collection.mutable.Map.empty[SparkSession, scala.collection.mutable.Buffer[DataFrame]]
-  private def trackedPersist(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    persistedBySession.synchronized {
-      // registry entries for stopped sessions are unreachable garbage
-      // (their blocks died with the context) — drop them here so a
-      // create-use-stop session churn can't grow the map unboundedly
-      persistedBySession.filterInPlace((s, _) => !s.sparkContext.isStopped)
-      persistedBySession.getOrElseUpdate(p.sparkSession,
-        scala.collection.mutable.Buffer.empty) += p
-    }
-    p
-  }
+  /** Every relation Dedup persists, per session (see [[clearCaches]]). */
+  private val registry = new graft.PersistRegistry[String]
 
   /** PUBLIC API: unpersist every relation the dedup stack cached for
     * `session` — the memoized shingle arrays plus all band-signature /
@@ -93,33 +78,17 @@ object Dedup {
     * rebuilds cleanly. Returns the number of relations unpersisted.
     * Long-lived services (a dedup endpoint, a notebook session) call this
     * between corpora; one-shot jobs can let the session teardown reclaim
-    * the blocks instead. Lock order matches docArraysCached (daCache →
-    * persistedBySession), so a concurrent memoization can never land an
-    * entry whose persist this call just revoked. */
-  def clearCaches(session: SparkSession): Int = daCache.synchronized {
-    daCache.filterInPlace { case ((s, _), _) => s != session }
-    persistedBySession.synchronized {
-      persistedBySession.remove(session)
-        .map { dfs => dfs.foreach(_.unpersist()); dfs.size }
-        .getOrElse(0)
-    }
-  }
+    * the blocks instead. */
+  def clearCaches(session: SparkSession): Int = registry.clear(session)
 
   /** Memoized PERSISTED distinct-shingle arrays per (session, dir): the
     * verify path is reached by two declared queries (jaccard, containment)
-    * plus every-query sweeps (PlanSpec, Verify, Bench) — per-call persist()
+    * plus every-query sweeps (PlanSpec, Verify) — per-call persist()
     * registered a fresh cache entry each time that only LRU eviction
     * reclaimed. One persisted copy per (session, dir) instead; reclaim via
     * [[clearCaches]]. */
-  private val daCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), DataFrame]
   private[llm] def docArraysCached(s: SparkSession, dir: String): DataFrame =
-    daCache.synchronized {
-      // same stopped-session hygiene as the persist registry: memo entries
-      // for dead sessions pin the session + its analyzed plan forever
-      daCache.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-      daCache.getOrElseUpdate((s, dir), trackedPersist(docArrays(s, dir, dedup = true)))
-    }
+    registry.memo(s, dir)(docArrays(s, dir, dedup = true))
 
   /** shingle string → deterministic id: open-vocab polynomial hash.
     * (The declared queries now hash inside MinHashSig/SimHashVec; this
@@ -170,7 +139,7 @@ object Dedup {
     * sigs are reclaimed by [[clearCaches]]. */
   def candidatesFromArrays(da: DataFrame, persistSigs: Boolean = true): DataFrame = {
     val sigs0 = bandSigsFromArrays(da)
-    val sigs = if (persistSigs) trackedPersist(sigs0) else sigs0
+    val sigs = if (persistSigs) registry.persist(sigs0) else sigs0
     val a = sigs.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
     val b = sigs.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
     a.join(b, Seq("band", "sig")).where(col("doc_a") < col("doc_b"))
@@ -235,7 +204,7 @@ object Dedup {
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3, persistArrays: Boolean = true): DataFrame = {
     val da0 = shingleArrays(df, idCol, textCol, n, dedup = true)
-    val da = if (persistArrays) trackedPersist(da0) else da0
+    val da = if (persistArrays) registry.persist(da0) else da0
     df.join(
       selfDedupLosers(da, threshold, persistSigs = persistArrays)
         .withColumnRenamed("doc_id", idCol),
@@ -300,7 +269,7 @@ object Dedup {
       // both self-join sides read `chunks` — persist so the map-side
       // SimHashVec pass runs once (reclaimed by clearCaches, same policy
       // as the minhash band sigs)
-      val chunks = trackedPersist(sims.select(col("doc_id"), col("simhash"),
+      val chunks = registry.persist(sims.select(col("doc_id"), col("simhash"),
         explode(array((0 until 4).map(c =>
           struct(lit(c).as("c"), col(s"cval$c").as("cval"))): _*)).as("ch"))
         .select(col("doc_id"), col("simhash"), col("ch.c").as("c"), col("ch.cval").as("cval")))

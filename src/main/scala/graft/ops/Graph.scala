@@ -88,40 +88,13 @@ object Graph {
   // every query after the first start from the (tiny) edge table.
   // Lifetime: LRU eviction, or [[clearCaches]] between corpora.
 
-  private val persistedBySession =
-    scala.collection.mutable.Map.empty[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Buffer[DataFrame]]
-  private def trackedPersist(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    persistedBySession.synchronized {
-      persistedBySession.filterInPlace((s, _) => !s.sparkContext.isStopped)
-      persistedBySession.getOrElseUpdate(p.sparkSession,
-        scala.collection.mutable.Buffer.empty) += p
-    }
-    p
-  }
+  private val registry = new graft.PersistRegistry[(String, String)]
 
   /** PUBLIC API: unpersist every relation the graph family cached for
     * `session` (basket grain + strong edges) and drop the memo entries so
-    * the next call rebuilds. Lock order matches the accessors
-    * (memo → persistedBySession). Returns relations unpersisted. */
+    * the next call rebuilds. Returns relations unpersisted. */
   def clearCaches(session: org.apache.spark.sql.SparkSession): Int =
-    memo.synchronized {
-      memo.filterInPlace { case ((s, _, _), _) => s != session }
-      persistedBySession.synchronized {
-        persistedBySession.remove(session)
-          .map { dfs => dfs.foreach(_.unpersist()); dfs.size }
-          .getOrElse(0)
-      }
-    }
-
-  private val memo = scala.collection.mutable.Map
-    .empty[(org.apache.spark.sql.SparkSession, String, String), DataFrame]
-  private def memoized(s: org.apache.spark.sql.SparkSession, dir: String,
-      key: String)(build: => DataFrame): DataFrame = memo.synchronized {
-    memo.filterInPlace { case ((sess, _, _), _) => !sess.sparkContext.isStopped }
-    memo.getOrElseUpdate((s, dir, key), trackedPersist(build))
-  }
+    registry.clear(session)
 
   /** Basket-size cap: baskets above this are dropped before pair
     * expansion. TPC-H orders carry ≤ 7 lines so the cap never fires on
@@ -138,7 +111,7 @@ object Graph {
   /** memoized basket grain: ONE lineitem shuffle to (orderkey, sorted
     * distinct items) shared by the edge build and association rules. */
   private[ops] def basketsCached(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = memoized(s, dir, "baskets") {
+      dir: String): DataFrame = registry.memo(s, (dir, "baskets")) {
     Tables(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey").cast("long").as("__i"))
       .groupBy("l_orderkey")
@@ -150,7 +123,7 @@ object Graph {
     * input of all 7 graph queries. Built from [[basketsCached]], so the
     * fact scan happens at most once per (session, dir) per sweep. */
   private[ops] def strongEdgesCached(s: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = memoized(s, dir, "edges") {
+      dir: String): DataFrame = registry.memo(s, (dir, "edges")) {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val pairs = ColumnBridge.column(graft.functions.ArrayPairs(
       ColumnBridge.expression(col("items"))))

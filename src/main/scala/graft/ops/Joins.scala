@@ -189,7 +189,7 @@ object Joins {
     // plan — no per-row re-execution (PLANS.md). View names carry a
     // per-INVOCATION unique suffix (besides the sf-dir tag) and are
     // dropped once the plan is analyzed: two concurrent builders — even
-    // for the SAME dir, e.g. Verify and Bench sharing one JVM — can
+    // for the SAME dir, e.g. two threads sweeping one dir in one JVM — can
     // never drop each other's views between createOrReplaceTempView and
     // s.sql, and nothing leaks into the shared session catalog.
     "join_lateral_topn" -> { (s, dir) =>

@@ -1,5 +1,5 @@
 package object graft {
   /** A declared query: (session, scale-factor dir) => result DataFrame.
-    * The driver materializes it (Verify) or counts it (Bench). */
+    * Verify materializes it; perfbench's reports collect it. */
   type Q = (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
 }

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object Sources {
 
   // shared scratch convention (Tables.scratchDir); note the write happens
-  // when the query lambda is INVOKED (Verify / Bench / plan tests), not at
+  // when the query lambda is INVOKED (Verify / perfbench / plan tests), not at
   // cluster execution time.
   private def tmpRoot(dir: String): String = Tables.scratchDir("sources", dir)
 

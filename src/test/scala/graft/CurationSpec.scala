@@ -163,7 +163,7 @@ class CurationSpec extends SparkSuite {
   }
 
   test("sweep-end hygiene: dedup queries then clearDedupCaches leave no persisted blocks behind") {
-    // the contract Verify/Bench rely on at sweep end: after the clear, the
+    // the contract Verify and perfbench rely on at sweep end: after the clear, the
     // context holds no MORE persisted RDDs than before the dedup family ran
     // (unpersist is async — spin briefly instead of asserting instantly)
     GraftOps.clearDedupCaches(spark)

@@ -383,4 +383,23 @@ class GraftOpsSpec extends SparkSuite {
     assert(out(1L)._2 == avg(Seq(2L, 2L, 2L)))
     assert(out(2L)._2 == avg(Seq(2L, 1L)))
   }
+
+  test("clearGraphCaches reclaims the graph family's persists only; queries still work after") {
+    GraftOps.clearGraphCaches(spark)
+    GraftOps.clearDedupCaches(spark)
+    // the triangle query memoizes the basket grain + the strong edges
+    val tri = SparkEntry.queries("graph_triangle_stats")(spark, sf).collect()
+    assert(GraftOps.clearGraphCaches(spark) == 2,
+      "graph_triangle_stats should have registered the baskets + edges")
+    assert(GraftOps.clearGraphCaches(spark) == 0, "a second clear finds nothing")
+    // one registry per family: a dedup persist is not the graph family's
+    val docs = (0 until 20).map(i => (i.toLong, s"alpha beta gamma delta word$i"))
+      .toDF("doc_id", "text")
+    GraftOps.dedupCorpus(docs, "doc_id", "text", 0.3).count()
+    assert(GraftOps.clearGraphCaches(spark) == 0, "graph clear touched dedup persists")
+    assert(GraftOps.clearDedupCaches(spark) >= 2, "dedup persists lost by the graph clear")
+    // the memo rebuilds cleanly after a clear, with the same answer
+    assert(SparkEntry.queries("graph_triangle_stats")(spark, sf).collect().toSeq == tri.toSeq)
+    assert(GraftOps.clearGraphCaches(spark) == 2, "memoized builds not re-registered")
+  }
 }

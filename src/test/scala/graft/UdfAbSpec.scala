@@ -6,7 +6,7 @@ import graft.functions.FingerprintForms
 /** §2.14: the one scalar-UDF demo. The SAME fingerprint logic as a
   * whole-stage-codegen expression chain and as a Scala UDF must agree
   * bit-for-bit — the A/B that justifies the "built-ins first" policy
-  * (the perf half of the A/B is FingerprintAbBench; the expression form
+  * (the measured perf half is recorded on FingerprintForms; the expression form
   * additionally keeps Catalyst able to prune/push around it).
   * Token sort order: expression array_sort compares UTF8String bytes,
   * the UDF compares UTF-16 strings — identical for the ASCII corpus

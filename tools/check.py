@@ -76,7 +76,7 @@ def main():
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
         if p.is_dir():
-            # Spark-written table (e.g. the ScaleProbe 10x corpus): a
+            # Spark-written table (e.g. a corpus graft.ScaleProbe built): a
             # directory of part files rather than the driver's single file
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')")

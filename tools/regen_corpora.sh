@@ -1,32 +1,27 @@
 #!/usr/bin/env bash
-# Regenerate every scaled probe corpus from the repo alone (r13 verdict
-# ask #6: the probe artifacts were honest but unreproducible — the /tmp
-# corpora are ephemeral). All generators are DETERMINISTIC functions of
-# the driver testdata: key-shifted union growth with fixed per-copy
-# tags/offsets (no RNG — see ScaleProbe's scaladoc for the growth-model
-# rationale), so a fresh machine rebuilds byte-identical inputs.
+# Regenerate every scaled corpus from the repo alone. All builders are
+# DETERMINISTIC functions of the base testdata: key-shifted union growth
+# with fixed per-copy tags/offsets (no RNG — see ScaleProbe's scaladoc for
+# the growth-model rationale), so a fresh machine rebuilds byte-identical
+# inputs.
 #
-#   10x  (sf1 scale)   /tmp/graft_scale10x    ScaleProbe (default factor 10)
-#   100x (sf10 scale)  /tmp/graft_scale100x   ScaleProbe with
-#                        SPARK_GRAFT_SCALE_DIR=/tmp/graft_scale100x
-#                        SPARK_GRAFT_SCALE_FACTOR=100
-#   skew (hot-key)     /tmp/graft_skew10x     SkewProbe (hot-user corpus,
-#                        sentinel _GRAFT_SKEW_OK)
+#   10x  (sf1 scale)   /tmp/graft_scale10x    graft.ScaleProbe, factor 10
+#   100x (sf10 scale)  /tmp/graft_scale100x   graft.ScaleProbe, factor 100
+#   skew (hot-key)     /tmp/graft_skew10x     graft.SkewProbe over the 10x
 #
-# Each generator writes a _GRAFT_SCALE_OK / _GRAFT_SKEW_OK sentinel when
-# complete and skips work if it exists — delete the sentinel (or the
-# dir) to force a rebuild. Generation happens as a side effect of
-# running each probe; to ONLY build a corpus without a full timing
-# sweep, restrict the probe to one cheap key with 1 run as below.
+# Each builder writes a _GRAFT_SCALE_OK / _GRAFT_SKEW_OK sentinel naming
+# what it built (factor and base) and reuses a dir only when that record
+# matches the request; any other dir is rebuilt. Delete the sentinel (or
+# the dir) to force a rebuild.
+#
+# Usage: tools/regen_corpora.sh [baseDir]   (default: the sf0.1 testdata)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 BASE=${1:-/root/testdata/sf0.1}
+export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
 
-echo "== 10x corpus (/tmp/graft_scale10x) from $BASE =="
-SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-SPARK_GRAFT_SCALE_KEYS=agg_groupby_q1 SPARK_GRAFT_SCALE_RUNS=1 \
-  sbt -batch "runMain graft.ScaleProbe $BASE"
-
-echo "Done. For the 100x corpus run the same command with"
-echo "  SPARK_GRAFT_SCALE_DIR=/tmp/graft_scale100x SPARK_GRAFT_SCALE_FACTOR=100"
-echo "and for the skew corpus run: sbt 'runMain graft.SkewProbe $BASE'"
+echo "== 10x, 100x and skew corpora from $BASE =="
+sbt -batch \
+  "runMain graft.ScaleProbe $BASE /tmp/graft_scale10x 10" \
+  "runMain graft.ScaleProbe $BASE /tmp/graft_scale100x 100" \
+  "runMain graft.SkewProbe /tmp/graft_scale10x /tmp/graft_skew10x"
