@@ -1,20 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps explain("formatted") for every declared query → PLANS.md.
   * Run: sbt "runMain graft.Explain /root/testdata/sf0.01" */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession()
     val sb = new StringBuilder
     sb.append("# PLANS — explain(formatted) for every declared query\n\n")
     sb.append(s"Generated by `graft.Explain` at $sfDir. Regenerate after plan-affecting changes.\n")

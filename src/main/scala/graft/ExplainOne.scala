@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump plans for a LIST of declared queries — the per-query counterpart
   * of [[Explain]], for the optimization-round before/after artifacts.
@@ -19,22 +18,7 @@ object ExplainOne {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // extra session confs, e.g. SPARK_GRAFT_EXPLAIN_CONF=
-    //   "spark.graft.shards.sampleMinBytes=0" to dump the at-scale
-    // kernel shape at toy SFs (the size floor routes tiny inputs to the
-    // range path by default)
-    sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
+    val spark = localSession()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -38,22 +38,9 @@ object ScaleProbe {
       System.err.println("usage: graft.ScaleProbe <baseDir> <outDir> <factor>")
       sys.exit(2)
     }
-    val spark = session()
+    val spark = localSession()
     try buildIfAbsent(spark, args(0), args(1), args(2).toInt)
     finally spark.stop()
-  }
-
-  /** Local session for the corpus builder mains. */
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 
   /** The record a finished build left in `dir`'s `sentinel`, if any. */

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev diagnostic (not part of the driver contract): EXECUTES every
   * declared query and reports how many parquet scans its FINAL adaptive
   * plan materialized. PLANS.md (pre-execution formatted explain) counts
@@ -19,14 +17,7 @@ import org.apache.spark.sql.SparkSession
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession()
     // Tree walk, not string grep: the plan STRING prints the cached plan
     // inside every InMemoryRelation (built once per sweep, not per query)
     // and repeats exchanges under "== Initial Plan ==" — both inflate a

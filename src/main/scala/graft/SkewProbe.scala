@@ -34,7 +34,7 @@ object SkewProbe {
       System.err.println("usage: graft.SkewProbe <baseDir> <outDir>")
       sys.exit(2)
     }
-    val spark = ScaleProbe.session()
+    val spark = localSession()
     try buildHotIfAbsent(spark, args(0), args(1))
     finally spark.stop()
   }

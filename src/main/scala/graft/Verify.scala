@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,57 +12,20 @@ object Verify {
     val keep: String => Boolean =
       args.lift(2).map(r => (n: String) => n.matches(r))
         .getOrElse(_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Retry-determinism sweep (round 12): SPARK_GRAFT_MAX_FAILURES=k runs
-    // under master local[n, k] (task retries enabled) with AGGRESSIVE
-    // speculation, pairing with Tables' SPARK_GRAFT_CHAOS=1 fail-once
-    // injection — the gate's hashes must be identical to a clean run.
-    // Driver behavior unchanged: neither env is set in driver runs.
+    // under master local[n, k] (task retries enabled), pairing with
+    // Tables' SPARK_GRAFT_CHAOS=1 fail-once injection — the gate's hashes
+    // must be identical to a clean run. Both are off unless set.
     val maxFailures = sys.env.get("SPARK_GRAFT_MAX_FAILURES").map(_.toInt)
-    val builder = SparkSession.builder()
-      .master(maxFailures.fold(s"local[$cpus]")(k => s"local[$cpus, $k]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    maxFailures.foreach { _ =>
-      builder.config("spark.speculation", "true")
-        .config("spark.speculation.interval", "50ms")
-        .config("spark.speculation.quantile", "0.5")
-        .config("spark.speculation.multiplier", "1.2")
-        // sf0.01 tasks finish under the default 100ms floor
-        .config("spark.speculation.minTaskRuntime", "0ms")
-      // HONESTY NOTE: TaskSchedulerImpl.start() only starts the
-      // speculation scheduler when !isLocal (verified against the 4.1.2
-      // bytecode), so under a local[] master speculative_tasks is always
-      // 0 — the axis this sweep actually proves is TASK-RETRY
-      // determinism (hundreds of real attempt-0 failures re-executed).
-      // The speculation confs stay set so the same sweep run on a real
-      // cluster master exercises duplicate attempts too; the listener
-      // below records whether any launched.
-    }
-    val spark = builder.getOrCreate()
-    // Optional extra session confs (r15), e.g. SPARK_GRAFT_VERIFY_CONF=
-    //   "spark.graft.shards.sampleMinBytes=0" to oracle-gate the kernels'
-    // single-exchange path at toy SFs (the size floor routes tiny inputs
-    // to the range path by default). The driver never sets this env, so
-    // driver behavior is unchanged — same opt-in pattern as the
-    // retry-determinism sweep above.
-    sys.env.get("SPARK_GRAFT_VERIFY_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
-    spark.sparkContext.setLogLevel("WARN")
-    // observed retry/speculation activity, reported at the end so the
-    // sweep proves the failure path actually exercised
+    val spark = localSession(
+      maxFailures.fold(s"local[$localCpus]")(k => s"local[$localCpus, $k]"))
+    // observed retry activity, reported at the end so the sweep proves
+    // the failure path actually exercised
     val failedTasks = new java.util.concurrent.atomic.AtomicLong(0)
-    val speculativeTasks = new java.util.concurrent.atomic.AtomicLong(0)
     if (maxFailures.isDefined) spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          if (e.taskInfo != null) {
-            if (e.taskInfo.failed) failedTasks.incrementAndGet()
-            if (e.taskInfo.speculative) speculativeTasks.incrementAndGet()
-          }
+          if (e.taskInfo != null && e.taskInfo.failed) failedTasks.incrementAndGet()
         }
       })
     new java.io.File(outDir).mkdirs()
@@ -76,7 +38,7 @@ object Verify {
     }
     if (maxFailures.isDefined)
       System.err.println(s"[verify-chaos] injected_failures=${Tables.chaosInjected.get()} " +
-        s"failed_tasks=${failedTasks.get()} speculative_tasks=${speculativeTasks.get()}")
+        s"failed_tasks=${failedTasks.get()}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -56,14 +55,7 @@ object WindowAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val keep: String => Boolean =
       args.lift(1).map(r => (n: String) => n.matches(r)).getOrElse(_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession()
     var hits = 0
     SparkEntry.queries.toSeq.sortBy(_._1).filter(kv => keep(kv._1)).foreach {
       case (name, fn) =>

@@ -26,20 +26,17 @@ import org.apache.spark.sql.functions._
   * `Window.partitionBy(source)` cumsum funnels each source's entire
   * token stream through ONE task (window partitions are single-task in
   * Spark), which is fatal when the corpus has ~20 sources and 100 TB of
-  * text. Instead (single-exchange form, r15):
-  *   1. assign each row a deterministic monotone shard id MAP-SIDE —
-  *      boundaries sampled once on the driver ([[RangeShards]]), an
-  *      order-preserving split of the (source, id) stream into `shards`
-  *      contiguous runs with no exchange;
-  *   2. per-(source, shard) token totals — map-side partial aggregation,
-  *      a tiny (≤ sources×shards row) relation — cumsum'd over shard
-  *      rank to get each shard's global starting offset, broadcast back;
-  *   3. ONE full-data hash exchange on the shard id (bijective values:
-  *      one shard per partition), local exclusive cumsum per
-  *      (source, shard) — `shards`-way parallel;
+  * text. Instead:
+  *   1. `repartitionByRange(shards, source, id)` — an order-preserving
+  *      split of the (source, id) stream into `shards` contiguous runs;
+  *   2. local exclusive cumsum per (source, shard) — `shards`-way
+  *      parallel, each window partition holds ~1/shards of the data;
+  *   3. per-(source, shard) token totals — a tiny (≤ sources×shards row)
+  *      relation — cumsum'd over shard rank to get each shard's global
+  *      starting offset, broadcast-joined back;
   *   4. global cumsum = shard offset + local cumsum (map-side add).
-  * Deterministic — shard boundaries are a pure function of the data
-  * (value-hash sampling), and offset+local is the exact global running
+  * Deterministic — shard BOUNDARIES come from range-partitioner sampling
+  * and may vary run to run, but offset+local is the exact global running
   * sum regardless of where the cuts land, so pack_id never changes.
   */
 object Chunking {
@@ -105,21 +102,21 @@ object Chunking {
     * `sum(value).over(Window.partitionBy(part).orderBy(order))`, for the
     * case where a single group is too big for one task (Spark window
     * partitions are single-task; a 100 TB group = one executor thread).
-    * Two-level prefix sum, single-exchange form: a deterministic
-    * map-side split of the global (part, order) order into `shards`
-    * contiguous runs (default spark.sql.shuffle.partitions; boundaries
-    * driver-sampled once, see [[RangeShards]]), a per-(group, shard)
-    * local window cumsum behind ONE full-data hash exchange —
-    * parallelism = shards, never the group count — and a broadcast
-    * per-shard offset table (computed map-side-aggregated BEFORE the
-    * exchange) added map-side. The result is
+    * Two-level prefix sum: an order-preserving `repartitionByRange`
+    * split into `shards` contiguous runs (default
+    * spark.sql.shuffle.partitions), a per-(group, shard) local window
+    * cumsum — parallelism = shards, never the group count — and a
+    * broadcast per-shard offset table added map-side. The result is
     * provably independent of the shard count (offset + local = the exact
     * global running sum wherever the cuts land). `exclusive = true`
     * sums strictly-preceding rows (0 for each group's first row);
     * ties in `orderCol` are resolved by input order WITHIN a shard like
     * any window cumsum — pass a unique order key for total determinism.
     * Null group keys stay one group (null-safe offset join), matching
-    * the window form. */
+    * the window form. Pass exactly (part, order, value) when you can:
+    * that slim input shares one range exchange between the kernel's two
+    * branches through exchange reuse, while a wider frame (or exchange
+    * reuse off) is localCheckpointed first (see [[shardSplit]]). */
   def distributedRunningSum(df: DataFrame, partCol: String, orderCol: String,
       valueCol: String, outCol: String, exclusive: Boolean = false,
       shards: Int = 0): DataFrame =
@@ -148,18 +145,15 @@ object Chunking {
     val spark = df.sparkSession
     val nShards =
       if (shards > 0) shards else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Level 0/1: order-preserving split into monotone shards + the
-    // kernel's only full-data exchange — dual path, see [[shardSplit]].
+    // Level 0: order-preserving range split into monotone shards.
     val slimIn = df.columns.toSet ==
       (Set(partCol, orderCol) ++ valueOuts.map(_._1))
-    val (main, offSrc) =
-      shardSplit(df, Seq(col(partCol), col(orderCol)), nShards, slimIn)
-    // Level 2: per-(part, shard) totals cumsum'd over shard rank for each
-    // shard's global start offset (shard VALUES are monotone in shard
-    // rank, so orderBy(__shard) is order-faithful on both paths).
+    val ranged = shardSplit(df, Seq(col(partCol), col(orderCol)), nShards, slimIn)
+    // Level 2: per-(part, shard) totals — at most groups×nShards rows —
+    // cumsum'd over shard rank for each shard's global start offset.
     val wOff = Window.partitionBy(col(partCol)).orderBy(col("__shard"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = offSrc
+    val offsets = ranged
       .groupBy(col(partCol), col("__shard"))
       .agg(sum(col(valueOuts.head._1)).as("__stot0"),
         valueOuts.tail.zipWithIndex.map { case ((v, _), i) =>
@@ -167,17 +161,16 @@ object Chunking {
       .select(Seq(col(partCol).as("__okey"), col("__shard").as("__oshard")) ++
         valueOuts.indices.map(i =>
           coalesce(sum(col(s"__stot$i")).over(wOff), lit(0L)).as(s"__off$i")): _*)
-    // The window clusters by (part, __shard) — satisfied by main's
-    // partitioning on either path, so Catalyst adds only the
-    // in-partition sort; no single task ever holds more than ~1/nShards
-    // of a group. All value columns share ONE window spec, so Catalyst
-    // evaluates them in a single Window node.
+    // Level 1: cumsum WITHIN each (part, shard) run — the window
+    // partition key includes the shard, so no single task ever holds
+    // more than ~1/nShards of a group. All value columns share ONE
+    // window spec, so Catalyst evaluates them in a single Window node.
     val frame = Window.partitionBy(col(partCol), col("__shard"))
       .orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, if (exclusive) -1 else 0)
     // null-safe on the group key: the window form groups null keys
     // together, so the offset join must not drop them.
-    val withLocal = valueOuts.zipWithIndex.foldLeft(main) {
+    val withLocal = valueOuts.zipWithIndex.foldLeft(ranged) {
       case (acc, ((v, _), i)) =>
         acc.withColumn(s"__lcum$i", coalesce(sum(col(v)).over(frame), lit(0L)))
     }
@@ -191,72 +184,41 @@ object Chunking {
       valueOuts.indices.flatMap(i => Seq(s"__lcum$i", s"__off$i")): _*)
   }
 
-  /** Shared Level-0/1 of the two-level prefix-sum kernels: split the
-    * global `keyCols` order into `nShards` monotone, order-contiguous
-    * shards and establish the clustering a (part, __shard) window needs.
-    * Returns `(main, offSrc)`: `main` carries `__shard` and is already
-    * clustered for the window (no further full-data exchange); `offSrc`
-    * is what the per-shard offsets/tails aggregate should read. Dual
-    * path, chosen by input shape AND size
-    * ([[RangeShards.singleExchangePath]] — scan-chain inputs whose size
-    * estimate clears `spark.graft.shards.sampleMinBytes`, default 32 MB:
-    * the boundary sample is a separate action with ~0.2 s fixed cost,
-    * worth paying only when the removed exchange moves more than that;
-    * at production scale every fact relation qualifies):
+  /** Shared Level 0 of the two-level prefix-sum kernels: split the
+    * global `keyCols` order into `nShards` contiguous runs with
+    * `repartitionByRange` and tag each row with its range-partition id as
+    * `__shard` — monotone in the key order by construction, which is
+    * what makes offset + local exact.
     *
-    *  - SCAN-CHAIN inputs above the size floor (the consumers
-    *    whose kernel traffic is fact-sized, where exchanges dominate at
-    *    100 TB): r15 single-exchange form. The shard id is a
-    *    DETERMINISTIC map-side function of the key columns
-    *    ([[RangeShards.shardColumn]]: value-hash TakeOrdered sample over
-    *    the pruned key projection, evenly spaced driver-selected
-    *    splitters, binary-search assignment — monotone by construction,
-    *    which is what keeps offset + local exact). The one exchange
-    *    hashes the shard EXPRESSION with the count pinned (values are
-    *    murmur-bijective mod nShards ⇒ exact 1:1 shard→partition, no
-    *    synthetic-key collision skew; partitioning by the expression pins
-    *    the key columns below the exchange so every consumer branch
-    *    prunes to the SAME projection and ReuseExchange can serve them
-    *    from one materialization; ProjectExec's alias-aware partitioning
-    *    rewrites hash(expr) → hash(__shard) above it, so the window adds
-    *    no second exchange). Correctness nowhere depends on exchange
-    *    reuse — the assignment is a pure function — so no checkpoint
-    *    fallback exists on this path; offsets read the reused exchange
-    *    when the input is slim, the un-exchanged side otherwise (column
-    *    pruning would de-canonicalize a wide offsets subtree — the
-    *    round-7 lesson — so wide inputs aggregate map-side before a tiny
-    *    shuffle instead, guide §2.3).
-    *
-    *  - DERIVED inputs (aggregate/join/window/union below — censuses,
-    *    already shrunk far below the fact): the r14 range path.
-    *    repartitionByRange's sampling sketch reads an
-    *    already-materialized AQE stage nearly for free, whereas a
-    *    separate boundary-sample ACTION would recompute the whole
-    *    derivation (fact scan + fact exchange) — measured up to 1.6× the
-    *    query on analytics_abc_classification (r15 interleaved A/B).
-    *    The shard id is spark_partition_id() AFTER the sampled range
-    *    exchange, so both consumer branches MUST observe the same
-    *    physical exchange: slim inputs get that structurally
-    *    (canonically identical subtrees ⇒ ReuseExchange); wider frames —
-    *    or exchange reuse disabled by conf, sampled at plan-build time —
-    *    are localCheckpoint-materialized (lazy; blocks reclaimed by the
-    *    ContextCleaner when the result becomes unreferenced). */
+    * CORRECTNESS INVARIANT: the result feeds TWO plan branches (the
+    * offsets/tails aggregate and the main window) that are joined back
+    * together, and the shard id comes from spark_partition_id() AFTER the
+    * range exchange, whose boundaries RangePartitioner SAMPLES. Both
+    * branches must therefore observe the SAME physical exchange. Exchange
+    * reuse deduplicates the two subtrees only if they canonicalize
+    * identically, and column pruning silently breaks that: with columns
+    * beyond the kernel's own, the aggregate branch prunes them below the
+    * exchange while the window branch keeps them, and each branch
+    * materializes its OWN exchange with independently sampled boundaries
+    * (round 7: pipeline_select_budget planned two rangepartitioning
+    * exchanges — wrong sums wherever the sample stops seeing every row).
+    * So:
+    *  - `slimIn` (df is exactly the kernel's columns): the subtrees are
+    *    identical by construction and reuse is structural; PlanSpec pins
+    *    the one range exchange for the declared consumers.
+    *  - wider frames, or exchange reuse disabled by conf: the shard
+    *    assignment is localCheckpoint-materialized once (lazy; blocks
+    *    reclaimed by the ContextCleaner when the result becomes
+    *    unreferenced). The conf is sampled HERE, at plan-build time. */
   private def shardSplit(df: DataFrame, keyCols: Seq[org.apache.spark.sql.Column],
-      nShards: Int, slimIn: Boolean): (DataFrame, DataFrame) =
-    if (RangeShards.singleExchangePath(df)) {
-      val shardCol = RangeShards.shardColumn(df, keyCols, nShards)
-      val main = df.repartition(nShards, shardCol).withColumn("__shard", shardCol)
-      val offSrc = if (slimIn) main else df.withColumn("__shard", shardCol)
-      (main, offSrc)
-    } else {
-      val assigned = df
-        .repartitionByRange(nShards, keyCols: _*)
-        .withColumn("__shard", spark_partition_id())
-      val reuseOn = df.sparkSession.conf
-        .getOption("spark.sql.exchange.reuse").forall(_.toBoolean)
-      val ranged = if (reuseOn && slimIn) assigned else assigned.localCheckpoint(false)
-      (ranged, ranged)
-    }
+      nShards: Int, slimIn: Boolean): DataFrame = {
+    val assigned = df
+      .repartitionByRange(nShards, keyCols: _*)
+      .withColumn("__shard", spark_partition_id())
+    val reuseOn = df.sparkSession.conf
+      .getOption("spark.sql.exchange.reuse").forall(_.toBoolean)
+    if (reuseOn && slimIn) assigned else assigned.localCheckpoint(false)
+  }
 
   /** PUBLIC API: budget-capped corpus selection — keep each `streamCol`
     * stream's rows in ASCENDING `priorityCol` order until the running
@@ -345,10 +307,9 @@ object Chunking {
     * (no strictly-preceding row), exactly like
     * `max(v).over(orderBy(o).rowsBetween(unboundedPreceding, -1))` —
     * `greatest` skips the null offset/local sides natively. Slim
-    * (part, order, value) projections are still recommended so wide
-    * payloads never ride the kernel's exchange (join back on a unique
-    * key), but are no longer a correctness requirement — the shard id
-    * is a pure map-side function ([[RangeShards]]). */
+    * (part, order, value) inputs share one range exchange through
+    * reuse; wider inputs, or exchange reuse off, are localCheckpointed
+    * (see [[shardSplit]]). */
   def distributedRunningMax(df: DataFrame, partCol: String, orderCol: String,
       valueCol: String, outCol: String, exclusive: Boolean = false,
       shards: Int = 0): DataFrame = {
@@ -359,21 +320,19 @@ object Chunking {
     val spark = df.sparkSession
     val nShards =
       if (shards > 0) shards else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // dual-path split — see [[shardSplit]]
     val slimIn = df.columns.toSet == Set(partCol, orderCol, valueCol)
-    val (main, offSrc) =
-      shardSplit(df, Seq(col(partCol), col(orderCol)), nShards, slimIn)
+    val ranged = shardSplit(df, Seq(col(partCol), col(orderCol)), nShards, slimIn)
     val frame = Window.partitionBy(col(partCol), col("__shard"))
       .orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, if (exclusive) -1 else 0)
     val wOff = Window.partitionBy(col(partCol)).orderBy(col("__shard"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = offSrc
+    val offsets = ranged
       .groupBy(col(partCol), col("__shard"))
       .agg(max(col(valueCol)).as("__mtot"))
       .select(col(partCol).as("__mkey"), col("__shard").as("__mshard"),
         max(col("__mtot")).over(wOff).as("__moff"))
-    main
+    ranged
       .withColumn("__lmax", max(col(valueCol)).over(frame))
       .join(broadcast(offsets),
         col(partCol) <=> col("__mkey") && col("__shard") === col("__mshard"))
@@ -395,10 +354,9 @@ object Chunking {
     * any group cardinality (100M users cannot blow the broadcast).
     * `orderCols` must be a unique total order within each group (the
     * tail row is selected by struct-max over them). Slim
-    * (part, order..., value) projections are still recommended so wide
-    * payloads never ride the kernel's exchange, but are no longer a
-    * correctness requirement — the shard id is a pure map-side function
-    * ([[RangeShards]]); no localCheckpoint fallback remains. */
+    * (part, order..., value) inputs share one range exchange through
+    * reuse; wider inputs, or exchange reuse off, are localCheckpointed
+    * (see [[shardSplit]]). */
   def distributedLag(df: DataFrame, partCol: String, orderCols: Seq[String],
       valueCol: String, outCol: String, shards: Int = 0): DataFrame = {
     val reserved = Seq("__shard", "__rn", "__lv", "__lst", "__has", "__ptv",
@@ -411,12 +369,12 @@ object Chunking {
     val nShards =
       if (shards > 0) shards else spark.conf.get("spark.sql.shuffle.partitions").toInt
     val ord = orderCols.map(col)
-    // dual-path split — see [[shardSplit]]
     val slimIn = df.columns.toSet == (Set(partCol, valueCol) ++ orderCols)
-    val (main, offSrc) = shardSplit(df, col(partCol) +: ord, nShards, slimIn)
+    val ranged = shardSplit(df, col(partCol) +: ord, nShards, slimIn)
     // per-(group, shard) tail value: struct-max over the unique order
-    // picks the run's LAST row; plain aggregate.
-    val tails = offSrc
+    // picks the run's LAST row; plain aggregate, so this branch shares
+    // the range exchange with the window branch (no second window pass).
+    val tails = ranged
       .groupBy(col(partCol), col("__shard"))
       .agg(max(struct(ord.zipWithIndex.map { case (c, i) => c.as(s"__o$i") } :+
         col(valueCol).as("__tv"): _*)).as("__lst"))
@@ -430,7 +388,7 @@ object Chunking {
       .select(col(partCol).as("__ckey"), col("__shard").as("__cshard"),
         col("__ptv"))
     val wls = Window.partitionBy(col(partCol), col("__shard")).orderBy(ord: _*)
-    main
+    ranged
       .withColumn("__rn", row_number().over(wls))
       .withColumn("__lv", lag(col(valueCol), 1).over(wls))
       .join(broadcast(corr),
@@ -481,12 +439,10 @@ object Chunking {
     // first-row marker, so no row_number is needed. Only __lcum (not
     // the transient flag) survives into the checkpointed projection —
     // the materialized width is the caller's columns + 2 longs.
-    // dual-path split — see [[shardSplit]]; slimIn = true because the
-    // pre-window data has a single consumer here (the window OUTPUT is
-    // what feeds two — tails aggregate + final join — and it keeps its
-    // localCheckpoint materialization below).
-    val (sessMain, _) = shardSplit(df, col(partCol) +: ord, nShards, slimIn = true)
-    val local = sessMain
+    // slimIn = true: the range-split data has a single consumer here
+    // (the window OUTPUT is what feeds two — tails aggregate + final
+    // join — and it is localCheckpoint-materialized below).
+    val local = shardSplit(df, col(partCol) +: ord, nShards, slimIn = true)
       .withColumn("__lns",
         when(lag(lit(1), 1).over(wls).isNull, 0L)
           .when(col(tsCol) - lag(col(tsCol), 1).over(wls) > gapMicros, 1L)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Sequence-shaping APIs (llm.Chunking) on user DataFrames. */
 class ChunkingSpec extends SparkSuite {
   import TestSpark.spark.implicits._
@@ -92,8 +90,10 @@ class ChunkingSpec extends SparkSuite {
   }
 
   test("distributedRunningSum == window running sum, inclusive and exclusive, any shards") {
-    val rows = (0 until 120).map(i => (s"p${i % 4}", i.toLong, (i % 7 + 1).toLong))
-    val df = rows.toDF("p", "o", "v")
+    // 4000 rows over 4 input partitions: RangePartitioner samples only
+    // part of each, so two independently sampled range exchanges would
+    // cut at different boundaries and misalign the offsets.
+    val rows = (0 until 4000).map(i => (s"p${i % 4}", (i * 7919L) % 4000L, (i % 7 + 1).toLong))
     val model = rows.groupBy(_._1).flatMap { case (_, rs) =>
       val sorted = rs.sortBy(_._2)
       val cums = sorted.map(_._3).scanLeft(0L)(_ + _)
@@ -101,67 +101,14 @@ class ChunkingSpec extends SparkSuite {
         o -> (cums(i), cums(i) + v) // (exclusive, inclusive)
       }
     }.toMap
-    // both kernel paths must agree with the window model: the default
-    // conf routes this toy input to the r14 range path (below the 32 MB
-    // sample floor), sampleMinBytes=0 forces the r15 single-exchange
-    // boundary-sampled path (the at-scale shape)
-    for (minBytes <- Seq(None, Some("0"))) {
-      val key = graft.llm.RangeShards.SampleMinBytesConf
-      minBytes.foreach(TestSpark.spark.conf.set(key, _))
-      try {
-        for (shards <- Seq(1, 5, 64); excl <- Seq(true, false)) {
-          val got = GraftOps.distributedRunningSum(df, "p", "o", "v", "cum",
-              exclusive = excl, shards = shards)
-            .select("o", "cum").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          val want = model.view.mapValues(m => if (excl) m._1 else m._2).toMap
-          assert(got == want,
-            s"diverged at shards=$shards exclusive=$excl minBytes=$minBytes")
-        }
-      } finally if (minBytes.isDefined) TestSpark.spark.conf.unset(key)
-    }
-  }
-
-  test("RangeShards: boundary sampling is a pure function of the data (r15 determinism spec)") {
-    // the shard id must be identical for a given row regardless of input
-    // partitioning/parallelism — the property the single-exchange kernel's
-    // correctness stands on (offsets branch and window branch assign
-    // shards independently). Value-hash sampling + driver-side splitter
-    // selection guarantees it; pin it across repartitionings and shard
-    // counts, including a skewed key distribution.
-    import TestSpark.spark.implicits._
-    val base = (1 to 2000).map(i => (s"g${i % 3}", (i * 7919) % 500, i.toLong))
-      .toDF("p", "o", "v")
-    for (nShards <- Seq(4, 16)) {
-      val layouts = Seq(base, base.repartition(13), base.repartition(1),
-        base.repartitionByRange(7, col("v")))
-      val assignments = layouts.map { l =>
-        l.withColumn("__s",
-            graft.llm.RangeShards.shardColumn(l, Seq(col("p"), col("o")), nShards))
-          .select("p", "o", "__s").distinct()
-          .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
+    forEachShardSplit(rows.toDF("p", "o", "v").repartition(4)) { (split, df) =>
+      for (shards <- Seq(1, 5, 64); excl <- Seq(true, false)) {
+        val got = GraftOps.distributedRunningSum(df, "p", "o", "v", "cum",
+            exclusive = excl, shards = shards)
+          .select("o", "cum").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val want = model.view.mapValues(m => if (excl) m._1 else m._2).toMap
+        assert(got == want, s"diverged at shards=$shards exclusive=$excl split=$split")
       }
-      assignments.tail.foreach(a => assert(a == assignments.head,
-        s"shard assignment varies with input partitioning at nShards=$nShards"))
-      // monotone: ordering by (p, o) never decreases the shard id
-      val sorted = assignments.head.toSeq.sortBy(_._1)
-      assert(sorted.map(_._2) == sorted.map(_._2).sorted,
-        "shard ids are not monotone in the key order")
-    }
-  }
-
-  test("RangeShards: bijective shard values hit every partition exactly once") {
-    for (n <- Seq(1, 2, 7, 32, 200)) {
-      val vs = graft.llm.RangeShards.bijectiveShardValues(n)
-      assert(vs.length == n && vs.toSeq == vs.sorted.toSeq && vs.distinct.length == n)
-      // each value must land in its own partition under Spark's own
-      // hash-partitioning expression (murmur3 seed 42, pmod n)
-      val pids = vs.map { v =>
-        val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-          Seq(org.apache.spark.sql.catalyst.expressions.Literal(v)))
-          .eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int]
-        ((h % n) + n) % n
-      }
-      assert(pids.toSet.size == n, s"shard values collide at n=$n")
     }
   }
 

@@ -254,31 +254,17 @@ class PlanSpec extends SparkSuite {
     assert(!bad, "tf relation shuffles token occurrences")
   }
 
-  /** run `body` with the single-exchange kernel path forced on (the
-    * at-scale shape: the 32 MB size floor routes toy-scale inputs to the
-    * range path by default — see RangeShards.singleExchangePath). */
-  private def withSingleExchangeKernels[T](body: => T): T = {
-    val key = graft.llm.RangeShards.SampleMinBytesConf
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "0")
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("pipeline_pack_sequences prefix-sums per range shard, never per source alone") {
     // The naive form cumsums with Window.partitionBy(source): ~20 window
     // partitions = ~20 tasks for the whole corpus at 100 TB. The two-level
-    // form must (a) split the (source, doc_id) order into shards — at
-    // scale a MAP-SIDE boundaryshard assignment, not a range exchange —
-    // and (b) run the full-data window keyed by (source, __shard). A
-    // window keyed by source ALONE is only legal over the per-shard
-    // TOTALS — a ≤ sources×shards row aggregate.
-    val p = withSingleExchangeKernels(plan("pipeline_pack_sequences"))
-    assert(p.contains("boundaryshard"),
-      s"no map-side monotone shard assignment:\n${p.take(2000)}")
+    // form must (a) range-split the (source, doc_id) order into shards and
+    // (b) run the full-data window keyed by (source, __shard). A window
+    // keyed by source ALONE is only legal over the per-shard TOTALS — a
+    // ≤ sources×shards row aggregate.
+    val p = plan("pipeline_pack_sequences")
+    assert(p.linesIterator.exists(l =>
+        l.contains("Exchange rangepartitioning(source#") && l.contains("doc_id#")),
+      s"no order-preserving (source, doc_id) range split:\n${p.take(2000)}")
     val lines = p.linesIterator.toVector
     val winIdx = lines.zipWithIndex.filter(_._1.contains("Window ["))
     assert(winIdx.exists(_._1.contains("__shard")),
@@ -303,59 +289,53 @@ class PlanSpec extends SparkSuite {
     assert(p.contains("int8dot"), s"ranking not through Int8Dot:\n${p.take(2000)}")
   }
 
-  /** r15 single-exchange invariant for the distributed prefix-sum kernel:
-    * the executed plan must materialize EXACTLY ONE full-data exchange —
-    * the pinned `repartition(nShards, __shard)` (REPARTITION_BY_NUM on
-    * __shard alone) — and NO rangepartitioning exchange on the kernel's
-    * order key (`orderKeyMark`). The offsets branch's post-partial-agg
-    * exchange is keyed (part, __shard) and carries ≤ groups×shards rows;
-    * it is excluded by requiring the REPARTITION_BY_NUM marker, which only
-    * the kernel's explicit repartition produces. Shard ids are a pure
-    * map-side function (boundaryshard), so no exchange-reuse invariant
-    * remains — the count is a PERFORMANCE pin, not a correctness glue. */
-  private def assertSingleShardExchange(query: String, orderKeyMark: String): Unit =
-    withSingleExchangeKernels {
+  /** Range-path invariant of the distributed prefix-sum kernel: the
+    * offsets aggregate and the main window both read `__shard =
+    * spark_partition_id()` after a SAMPLED range exchange, so they must
+    * observe ONE physical exchange — divergent boundary samples silently
+    * misalign the offsets. Pin it in the AQE-final plan (the "Initial
+    * Plan" echo split off): exactly one materialized rangepartitioning
+    * exchange on the kernel's order key (`orderKeyMark`), and the second
+    * branch reading it through a ReusedExchange. Two independently
+    * sampled exchanges (the round-7 wrong-sums shape) fail the first
+    * check; a localCheckpoint'ed split (no exchange left in the plan)
+    * fails it too. */
+  private def assertOneSharedRangeExchange(query: String, orderKeyMark: String): Unit = {
     val df = SparkEntry.queries(query)(spark, sf)
     df.collect()
     val finalPlan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
-    val nRange = finalPlan.linesIterator.count(l =>
-      l.contains("Exchange rangepartitioning") && l.contains(orderKeyMark) &&
-        !l.contains("ReusedExchange"))
-    assert(nRange == 0,
-      s"$query: kernel still plans a range exchange on $orderKeyMark:\n${finalPlan.take(4000)}")
-    val nShardExchanges = finalPlan.linesIterator.count(l =>
-      l.contains("Exchange hashpartitioning(boundaryshard") &&
-        l.contains("REPARTITION_BY_NUM") && !l.contains("ReusedExchange"))
-    assert(nShardExchanges == 1,
-      s"$query: expected exactly 1 full-data __shard exchange, got $nShardExchanges:\n${finalPlan.take(4000)}")
-    assert(finalPlan.contains("boundaryshard"),
-      s"$query: shard assignment is not the map-side boundaryshard expression")
+    def onKey(l: String) =
+      l.contains("Exchange rangepartitioning") && l.contains(orderKeyMark)
+    val nRange = finalPlan.linesIterator.count(l => onKey(l) && !l.contains("ReusedExchange"))
+    assert(nRange == 1,
+      s"$query: expected exactly 1 materialized shard-split range exchange, got $nRange:\n${finalPlan.take(4000)}")
+    assert(finalPlan.linesIterator.exists(l => onKey(l) && l.contains("ReusedExchange")),
+      s"$query: the second kernel branch does not reuse the range exchange:\n${finalPlan.take(4000)}")
   }
 
-  test("pipeline_pack_sequences plans ONE full-data exchange in the kernel") {
-    // first declared query through distributedRunningSum. The old shape
-    // paid range exchange + window hash exchange (both full-data) and
-    // leaned on exchange reuse to keep two branches on one sampled
-    // boundary set; the r15 kernel assigns shards map-side and pins the
-    // single full-data repartition. The query's OUTPUT sort is a separate
-    // (source, pack_id) range exchange and doesn't participate.
-    assertSingleShardExchange("pipeline_pack_sequences", "doc_id")
+  test("pipeline_pack_sequences' two branches observe ONE range exchange") {
+    // first declared query through distributedRunningSum. The query's
+    // OUTPUT sort is a separate (source, pack_id) range exchange and
+    // doesn't participate.
+    assertOneSharedRangeExchange("pipeline_pack_sequences", "doc_id#")
   }
 
-  test("pipeline_select_budget plans ONE full-data exchange in the kernel") {
-    // second declared query through distributedRunningSum — historically
-    // the one whose wide caller frame broke the old exchange-reuse
-    // invariant (round 7: two independently sampled range exchanges =
-    // wrong sums at scale). With map-side boundaryshard assignment the
-    // failure mode is structurally impossible; pin the plan shape.
-    assertSingleShardExchange("pipeline_select_budget", "__prio")
+  test("pipeline_select_budget's two branches observe ONE range exchange") {
+    // second declared query through distributedRunningSum. Its first
+    // shipped shape broke the invariant (round 7): the caller kept doc_id
+    // for downstream, column pruning gave the offsets branch a NARROWER
+    // exchange subtree, ReuseExchange no longer matched, and the plan
+    // materialized TWO independently sampled range exchanges. The kernel
+    // now runs on a slim 3-column projection and survivors semi-join back.
+    assertOneSharedRangeExchange("pipeline_select_budget", "__prio#")
   }
 
-  test("pipeline_quota_per_source plans ONE full-data exchange in the kernel") {
-    // third declared query through distributedRunningSum (the output
-    // sort's range exchange is on `source`, not `__prio`, and is excluded)
-    assertSingleShardExchange("pipeline_quota_per_source", "__prio")
+  test("pipeline_quota_per_source's two branches observe ONE range exchange") {
+    // third declared query through distributedRunningSum, on the slim
+    // (source, __prio, __one) projection (the output sort's range
+    // exchange is on `source`, not `__prio`, and is excluded)
+    assertOneSharedRangeExchange("pipeline_quota_per_source", "__prio#")
   }
 
   /** Execute and count parquet-scan lines in the AQE FINAL plan section —
