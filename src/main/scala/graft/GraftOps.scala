@@ -73,8 +73,8 @@ object GraftOps {
     * connectedComponents) instead when the intermediate pairs or clusters
     * need inspection. */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 3, persistArrays: Boolean = true): DataFrame =
-    llm.Dedup.dedupCorpus(df, idCol, textCol, threshold, n, persistArrays)
+      threshold: Double, n: Int = 3): DataFrame =
+    llm.Dedup.dedupCorpus(df, idCol, textCol, threshold, n)
 
   /** C4-style line-level exact dedup: split (doc_id, text) documents into
     * fixed `blockWords`-word blocks, keep only each block's corpus-wide
@@ -363,24 +363,24 @@ object GraftOps {
     * estimates are encounter-order-dependent. At 100 TB: pass 1 shuffles
     * one bounded sketch per (partition, group); pass 2 shuffles only rows
     * whose value is a candidate. Values compare by their string form.
-    * The candidate relation is groups×capacity rows and is broadcast by
-    * default (the prune must never degrade to a second full shuffle);
+    * The candidate relation is groups×capacity rows and is always
+    * broadcast (the prune must never degrade to a second full shuffle);
     * at extreme GROUP cardinality — where groups×capacity itself exceeds
-    * broadcast limits — pass `broadcastCandidates = false` to let the
-    * planner pick, or use [[approxTopValues]]. */
+    * broadcast limits — use [[approxTopValues]]. */
   def topValuesExact(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      capacity: Int, broadcastCandidates: Boolean = true): DataFrame =
-    clean.ProfileQueries.topValuesExact(df, groupCols, valueCol, capacity,
-      broadcastCandidates)
+      capacity: Int): DataFrame =
+    clean.ProfileQueries.topValuesExact(df, groupCols, valueCol, capacity)
 
   /** distribution drift between two slices of one relation (reference vs
     * current corpus) — ONE row: slice sizes, PSI over smoothed bin shares
     * with the `psi > 0.2` drift verdict, and the binned KS statistic
     * max |F_ref − F_cur|. `isRefCol` is the boolean slice flag,
-    * `bucketCol` an int bin id from any deterministic binning, `nBins`
-    * the nominal bin count (smoothing denominator). One groupBy(bucket)
-    * pass; all downstream math is on ≤ nBins rows via broadcasts — the
-    * pre-refresh data-quality gate of a training pipeline, at any scale. */
+    * `bucketCol` an integral bin id from any deterministic binning,
+    * `nBins` the nominal bin count (smoothing denominator). One
+    * groupBy(bucket) pass; the ≤ nBins-row histogram is then finished in
+    * one row by the same metric code the streaming drift monitor uses —
+    * the pre-refresh data-quality gate of a training pipeline, at any
+    * scale. */
   def driftPsiKs(df: DataFrame, isRefCol: String, bucketCol: String,
       nBins: Int): DataFrame =
     clean.ProfileQueries.driftPsiKs(df, isRefCol, bucketCol, nBins)

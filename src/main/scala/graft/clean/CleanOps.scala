@@ -121,8 +121,6 @@ final case class FillMean(column: String) extends CleanOp {
     s"""df.crossJoin(broadcast(df.agg(mean))).withColumn("$column", coalesce(col("$column"), mean))  // exact decimal mean"""
 }
 
-/** Fill numeric nulls with the exact median (linear-interpolated). Only the
-  * FILLED values are rounded — non-null data passes through untouched. */
 /** Fill nulls with the PER-GROUP exact-decimal mean — the imputation a
   * mixed-population column actually wants (a user's missing reading
   * imputed from THAT user's level, not the global one). Group means
@@ -145,6 +143,8 @@ final case class FillMeanByGroup(column: String, groups: Seq[String])
     s"""df.join(df.groupBy(${groups.map(g => s""""$g"""").mkString(", ")}).agg(mean), Seq(${groups.map(g => s""""$g"""").mkString(", ")}), "left").withColumn("$column", coalesce(col("$column"), gmean))  // exact decimal per-group mean"""
 }
 
+/** Fill numeric nulls with the exact median (linear-interpolated). Only the
+  * FILLED values are rounded — non-null data passes through untouched. */
 final case class FillMedian(column: String, roundTo: Int = 6) extends CleanOp {
   def apply(df: DataFrame): DataFrame = {
     val stats = df.agg(

@@ -2,9 +2,10 @@ package graft.clean
 
 import graft._
 import graft.Tables._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** §2.8 per-column profiling — the reference widget's column-summary pass.
   *
@@ -30,114 +31,83 @@ object ProfileQueries {
     * two slices of one relation (reference vs current: yesterday's corpus
     * vs today's batch, train vs eval, pre- vs post-filter), the data-
     * quality gate a training pipeline runs before accepting a refresh.
-    * Input: `isRefCol` (boolean slice flag) + `bucketCol` (int bin id from
-    * any deterministic binning; bins with no rows in either slice
-    * contribute nothing). Output is ONE row:
+    * Input: `isRefCol` (boolean slice flag) + `bucketCol` (integral bin id
+    * from any deterministic binning; a non-integral column is rejected
+    * rather than truncated). Output is ONE row: `n_ref`, `n_cur` (slice
+    * sizes) and the [[DriftMath]] verdict `psi`, `psi_drifted`, `ks`.
+    * Rows with a NULL bucket are excluded from BOTH metrics (coalesce
+    * nulls to a sentinel bucket upstream if they carry drift signal); an
+    * empty histogram (empty or all-null-bucket input) has a null psi.
+    *
+    * Scale shape: one groupBy(bucket) pass with conditional counts (≤ #bins
+    * rows), one global aggregate that collects that histogram into a
+    * single row, and a one-row UDF that finishes it with
+    * [[DriftMath.psiKs]] — the code the streaming monitor runs, so the
+    * batch and streaming gates cannot disagree. Lazy like every operator:
+    * nothing runs until the caller's action. */
+  def driftPsiKs(df: DataFrame, isRefCol: String, bucketCol: String,
+      nBins: Int): DataFrame = {
+    require(nBins > 0, "nBins must be positive")
+    val bucketType = df.select(col(bucketCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(bucketType),
+      s"driftPsiKs: bucket column $bucketCol must be integral, got ${bucketType.simpleString}")
+    val finish = udf { (hist: Seq[Row]) =>
+      val ref = hist.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val cur = hist.map(r => r.getLong(0) -> r.getLong(2)).toMap
+      val (psi, ks, drifted, _) = DriftMath.psiKs(ref, cur, nBins)
+      DriftCols(if (hist.isEmpty) None else Some(psi), drifted, ks)
+    }
+    df.where(col(bucketCol).isNotNull)
+      .groupBy(col(bucketCol).cast("long").as("bucket")).agg(
+        sum(when(col(isRefCol), 1L).otherwise(0L)).as("n_ref"),
+        sum(when(!col(isRefCol), 1L).otherwise(0L)).as("n_cur"))
+      .agg(sum(col("n_ref")).as("t_ref"), sum(col("n_cur")).as("t_cur"),
+        collect_list(struct(col("bucket"), col("n_ref"), col("n_cur")))
+          .as("hist"))
+      .select(coalesce(col("t_ref"), lit(0L)).as("n_ref"),
+        coalesce(col("t_cur"), lit(0L)).as("n_cur"),
+        finish(col("hist")).as("v"))
+      .select(col("n_ref"), col("n_cur"), col("v.psi"), col("v.psi_drifted"),
+        col("v.ks"))
+  }
+
+  private[clean] case class DriftCols(psi: Option[Double],
+      psi_drifted: Boolean, ks: Option[Double])
+
+  /** THE definition of the drift metrics, over two bucket → count
+    * histograms: the batch gate [[driftPsiKs]] finishes its one-row
+    * histogram here and the streaming monitor
+    * ([[graft.streaming.Stateful.driftMonitorStream]]) computes its
+    * per-micro-batch verdict here.
     *
     *   - `psi` — Population Stability Index Σ (p−q)·ln(p/q) over smoothed
     *     bin shares p=(n+0.5)/(N+nBins/2), q likewise (the 0.5 Laplace
     *     term keeps one-sided-empty bins finite). Industry folklore:
-    *     psi < 0.1 stable, > 0.2 drifted (`psi_drifted`).
+    *     psi < 0.1 stable, > 0.2 drifted.
     *   - `ks` — the binned Kolmogorov–Smirnov statistic max |F_ref −
     *     F_cur| over bin-cumulative RAW shares (no smoothing; empty bins
     *     cost 0).
     *
     * Degenerate inputs fail CLOSED: an empty slice (t_ref or t_cur = 0)
-    * sets `psi_drifted` true regardless of psi — the smoothed empty-side
-    * distribution degenerates to uniform and psi can read "stable" for
-    * exactly the refresh-produced-nothing failure the gate exists to
-    * catch — and its raw shares are null (zero-guarded divide), so `ks`
-    * is null, never ±Inf. Rows with a NULL bucket are excluded from BOTH
-    * metrics (coalesce nulls to a sentinel bucket upstream if they carry
-    * drift signal).
+    * is drifted regardless of psi — the smoothed empty-side distribution
+    * degenerates to uniform and psi can read "stable" for exactly the
+    * refresh-produced-nothing failure the gate exists to catch — and its
+    * `ks` is None, never ±Inf.
     *
-    * Scale shape: one pass groupBy(bucket) with conditional counts (tiny
-    * result ≤ #bins), then everything downstream is arithmetic on ≤#bins
-    * rows. The KS cumulatives avoid BOTH banned shapes — the
-    * empty-partitionBy window (single-task funnel) and a conditioned
-    * BroadcastNestedLoopJoin triangular self-join (O(n·m) row compares;
-    * PlanSpec bans it in declared plans regardless of size) — by
-    * expanding each bin to `sequence(bucket, max_bucket)` target ids and
-    * equi-grouping: ≤ nBins² generated rows, map-side, so bucket ids
-    * must be small dense ints (a real binning), never raw hash values.
-    * The step-function max |F_ref − F_cur| is invariant to the phantom
-    * targets the expansion adds between sparse bins. Double determinism:
-    * each PSI/cum term is cast to decimal(18,12) before summing
-    * (associative ⇒ partition-order-proof, the profile_entropy
-    * discipline), so the DuckDB oracle reproduces psi/ks bit-for-bit
-    * after round-6. */
-  def driftPsiKs(df: DataFrame, isRefCol: String, bucketCol: String,
-      nBins: Int): DataFrame = {
-    require(nBins > 0, "nBins must be positive")
-    // null buckets are excluded from BOTH metrics (counting them in the
-    // totals but not the KS cumulatives — where sequence(null, _) drops
-    // the row — would make psi and ks disagree about the same mass);
-    // callers whose binning can emit null must coalesce to a sentinel
-    // bucket if null carries drift signal
-    val binned = df.where(col(bucketCol).isNotNull)
-      .groupBy(col(bucketCol).as("bucket")).agg(
-        sum(when(col(isRefCol), 1L).otherwise(0L)).as("n_ref"),
-        sum(when(!col(isRefCol), 1L).otherwise(0L)).as("n_cur"))
-    // max(bucket) RIDES the totals aggregate: a separate binned.agg(max)
-    // branch gets pruned to a bucket-only subtree, no longer
-    // canonicalizes with the shares branch, and re-scans + re-shuffles
-    // the entire input — the same pruning-breaks-reuse trap
-    // distributedRunningSum documents and PlanSpec pins here
-    val tot = binned.agg(sum(col("n_ref")).as("t_ref"),
-      sum(col("n_cur")).as("t_cur"), max(col("bucket")).as("__maxb"))
-    val shares = binned.crossJoin(broadcast(tot)).select(
-      col("bucket"), col("__maxb"), col("t_ref"), col("t_cur"),
-      ((col("n_ref").cast("double") + lit(0.5)) /
-        (col("t_ref").cast("double") + lit(nBins / 2.0))).as("p"),
-      ((col("n_cur").cast("double") + lit(0.5)) /
-        (col("t_cur").cast("double") + lit(nBins / 2.0))).as("q"),
-      // raw shares go through a zero-guarded divide: an EMPTY slice must
-      // surface as null cumulatives (→ null ks) rather than ±Inf rows
-      when(col("t_ref") =!= 0,
-        col("n_ref").cast("double") / col("t_ref").cast("double")).as("pr"),
-      when(col("t_cur") =!= 0,
-        col("n_cur").cast("double") / col("t_cur").cast("double")).as("qr"))
-    val cums = shares
-      .select(col("pr"), col("qr"),
-        explode(sequence(col("bucket"), col("__maxb"))).as("__t"))
-      .groupBy(col("__t"))
-      .agg(sum(col("pr").cast("decimal(18,12)")).as("cp"),
-        sum(col("qr").cast("decimal(18,12)")).as("cq"))
-    val psi = shares.agg(
-      round(sum(((col("p") - col("q")) * log(col("p") / col("q")))
-        .cast("decimal(18,12)")).cast("double"), 6).as("psi"))
-    val ks = cums.agg(
-      round(max(abs((col("cp") - col("cq")).cast("double"))), 6).as("ks"))
-    // the gate FAILS CLOSED: an empty slice (or empty input) is drifted
-    // by definition — psi alone can read "stable" there, because the
-    // smoothed q degenerates to the uniform 1/nBins distribution
-    tot.crossJoin(broadcast(psi)).crossJoin(broadcast(ks)).select(
-      coalesce(col("t_ref"), lit(0L)).as("n_ref"),
-      coalesce(col("t_cur"), lit(0L)).as("n_cur"),
-      col("psi"),
-      (coalesce(col("t_ref"), lit(0L)) === 0 ||
-        coalesce(col("t_cur"), lit(0L)) === 0 ||
-        col("psi") > 0.2).as("psi_drifted"),
-      col("ks"))
-  }
-
-  /** Pure-Scala twin of [[driftPsiKs]]'s metric math, for consumers that
-    * hold the two histograms as plain maps — the streaming monitor
-    * ([[graft.streaming.Stateful.driftMonitorStream]]) computes its
-    * per-micro-batch verdict here. Same share smoothing, same
-    * decimal(18,12) per-term discipline (JBD.valueOf ≡ Catalyst's
-    * double→decimal cast, both the shortest-decimal-representation
-    * route), same HALF_UP round-6 — so a batch/streaming pair fed the
-    * same histograms agrees bit-for-bit (PropertiesSpec pins it). */
+    * Double determinism: each PSI / cumulative-share term is rounded to
+    * decimal(18,12) (JBD.valueOf ≡ Catalyst's double→decimal cast) and
+    * summed exactly, so bucket order cannot perturb the result; the logs
+    * are StrictMath's (Catalyst's `Log` evaluates StrictMath.log) and the
+    * final round-6 is HALF_UP like Catalyst's `round` — the DuckDB oracle
+    * reproduces psi/ks bit-for-bit. */
   private[graft] object DriftMath {
     import java.math.{BigDecimal => JBD, RoundingMode}
     private def dec12(d: Double): JBD =
       JBD.valueOf(d).setScale(12, RoundingMode.HALF_UP)
     private def round6(d: Double): Double =
       JBD.valueOf(d).setScale(6, RoundingMode.HALF_UP).doubleValue
-    /** returns (psi, ks — None when a slice is empty, drifted, t_cur);
-      * fail-closed semantics identical to the DataFrame form. */
-    def psiKs(ref: Map[Int, Long], cur: Map[Int, Long], nBins: Int)
+    /** returns (psi, ks — None when a slice is empty, drifted, t_cur). */
+    def psiKs[B: Ordering](ref: Map[B, Long], cur: Map[B, Long], nBins: Int)
         : (Double, Option[Double], Boolean, Long) = {
       val buckets = (ref.keySet ++ cur.keySet).toSeq.sorted
       val tRef = ref.valuesIterator.sum
@@ -146,7 +116,7 @@ object ProfileQueries {
       buckets.foreach { b =>
         val p = (ref.getOrElse(b, 0L) + 0.5) / (tRef + nBins / 2.0)
         val q = (cur.getOrElse(b, 0L) + 0.5) / (tCur + nBins / 2.0)
-        psiSum = psiSum.add(dec12((p - q) * math.log(p / q)))
+        psiSum = psiSum.add(dec12((p - q) * StrictMath.log(p / q)))
       }
       val psi = round6(psiSum.doubleValue)
       val ks =
@@ -183,7 +153,7 @@ object ProfileQueries {
     * heavy threshold is over its actual values). Values compare by string
     * form; output columns: groupCols…, valueCol (string), cnt. */
   def topValuesExact(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      capacity: Int, broadcastCandidates: Boolean = true): DataFrame = {
+      capacity: Int): DataFrame = {
     val reserved = Seq("__v", "__cv", "__topk", "__n", "cnt") ++
       groupCols.map(c => s"__g_$c")
     // only the columns that survive the initial projection can collide —
@@ -203,12 +173,10 @@ object ProfileQueries {
     // broadcast it structurally rather than trusting the planner's size
     // estimate (an AQE-off session over-estimating the aggregate would
     // otherwise degrade this prune to a full second shuffle of the input,
-    // the exact cost the sketch exists to avoid). The flip side: at
-    // extreme GROUP cardinality groups×capacity itself can exceed
-    // broadcast limits — callers there pass broadcastCandidates = false
-    // and accept the planner's choice
-    val candRel = if (broadcastCandidates) broadcast(cand) else cand
-    val joined = sdf.join(candRel,
+    // the exact cost the sketch exists to avoid). At extreme GROUP
+    // cardinality, where groups×capacity itself exceeds broadcast limits,
+    // callers use approxTopValues instead
+    val joined = sdf.join(broadcast(cand),
       (groupCols.map(c => sdf(c) <=> cand(s"__g_$c")) :+
         (sdf("__v") === cand("__cv"))).reduce(_ && _))
     joined
@@ -529,16 +497,14 @@ object ProfileQueries {
         |c AS (SELECT event_type, v, count(*) AS cnt FROM ev GROUP BY 1, 2)
         |SELECT c.event_type, c.v, c.cnt FROM c JOIN n USING (event_type)
         |WHERE cnt * 9 > n_events ORDER BY event_type, v""".stripMargin,
-    // mirrors driftPsiKs term by term: smoothed shares as doubles, each
+    // mirrors DriftMath term by term: smoothed shares as doubles, each
     // PSI / cumulative-share term cast to decimal(18,12) before summing
     // (the entropy discipline), round-6 at the end. All share arithmetic
     // forces double EXPLICITLY — DuckDB's 0.5/10.0 literals are DECIMAL,
-    // and bigint+decimal division has different semantics than Spark's
+    // and bigint+decimal division has different semantics than Scala's
     // long+double. The KS cumulatives here use a TRIANGULAR self-join
-    // (fine in DuckDB; the Spark side uses a sequence-expansion instead
-    // because PlanSpec bans conditioned BNLJ in declared plans) — the
-    // max |cp − cq| is identical: the expansion only adds phantom
-    // targets where the step functions repeat values
+    // (fine in DuckDB) where DriftMath runs the same exact decimal sums
+    // in bucket order — the max |cp − cq| is identical
     "profile_drift_psi_ks" ->
       """WITH o AS (SELECT (o_orderkey % 2 = 0) AS is_ref,
         |    cast(least(floor(o_totalprice / 25000.0), 19.0) as int) AS bucket

@@ -197,17 +197,13 @@ object Dedup {
     * the anti-join shuffles on the id — still corpus-linear).
     *
     * The shingle arrays feed both the signature pass and the verify join,
-    * so they persist by default; `persistArrays = false` (paired with
-    * `persistSigs = false` downstream) makes the call register NOTHING
-    * with the CacheManager — the shape for per-micro-batch callers.
-    * Persisted arrays are reclaimed by [[clearCaches]]. */
+    * so they persist (reclaimed by [[clearCaches]]); per-micro-batch
+    * callers that must register nothing with the CacheManager enter at
+    * [[selfDedupLosers]] with `persistSigs = false` instead. */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 3, persistArrays: Boolean = true): DataFrame = {
-    val da0 = shingleArrays(df, idCol, textCol, n, dedup = true)
-    val da = if (persistArrays) registry.persist(da0) else da0
-    df.join(
-      selfDedupLosers(da, threshold, persistSigs = persistArrays)
-        .withColumnRenamed("doc_id", idCol),
+      threshold: Double, n: Int = 3): DataFrame = {
+    val da = registry.persist(shingleArrays(df, idCol, textCol, n, dedup = true))
+    df.join(selfDedupLosers(da, threshold).withColumnRenamed("doc_id", idCol),
       Seq(idCol), "left_anti")
   }
 

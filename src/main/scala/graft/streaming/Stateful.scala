@@ -216,13 +216,12 @@ object Stateful {
     * micro-batch emits the key's refreshed PSI/KS verdict against the
     * static `reference` histogram (Update mode) — the
     * watch-the-ingest-distribution shape where re-running the batch gate
-    * per refresh would rescan the whole corpus. The metric math is the
-    * SHARED [[graft.clean.ProfileQueries.DriftMath]] kernel (same
-    * smoothing, decimal term discipline, and rounding as the batch
-    * DataFrame form — PropertiesSpec pins the parity), so the verdict
-    * fails CLOSED exactly like batch: an empty reference is drifted with
-    * ks None. Null buckets must be handled upstream (`BucketObs.bucket`
-    * is primitive — coalesce to a sentinel bin before constructing). */
+    * per refresh would rescan the whole corpus. The metric math is
+    * [[graft.clean.ProfileQueries.DriftMath]], the one definition the
+    * batch gate also finishes with, so the verdict fails CLOSED exactly
+    * like batch: an empty reference is drifted with ks None. Null
+    * buckets must be handled upstream (`BucketObs.bucket` is primitive —
+    * coalesce to a sentinel bin before constructing). */
   def driftMonitorStream(rows: Dataset[BucketObs], reference: Map[Int, Long],
       nBins: Int): Dataset[DriftVerdict] = {
     require(nBins > 0, "nBins must be positive")

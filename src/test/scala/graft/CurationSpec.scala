@@ -152,10 +152,6 @@ class CurationSpec extends SparkSuite {
     GraftOps.dedupCorpus(docs, "doc_id", "text", 0.3).count()
     assert(GraftOps.clearDedupCaches(spark) >= 2,
       "dedupCorpus should have registered the arrays + band sigs")
-    // opt-out path registers nothing
-    GraftOps.dedupCorpus(docs, "doc_id", "text", 0.3, persistArrays = false).count()
-    assert(GraftOps.clearDedupCaches(spark) == 0,
-      "persistArrays=false must register nothing with the CacheManager")
     // caches rebuild cleanly after a clear: the declared jaccard query
     // (memoized docArraysCached path) still answers
     assert(SparkEntry.queries("dedup_ngram_jaccard")(spark, sf).count() >= 0)

@@ -387,16 +387,14 @@ class PlanSpec extends SparkSuite {
 
   test("profile_drift_psi_ks scans its input exactly once") {
     // the drift gate's contract is ONE groupBy(bucket) pass over the
-    // input with everything downstream on ≤ nBins rows. binned feeds
-    // several branches (totals+max, shares, psi) that must all reuse the
-    // same aggregate subtree; an earlier shape computed max(bucket) as
-    // its own binned.agg, which column pruning narrowed to a bucket-only
-    // subtree — no longer canonically equal, so the whole input was
-    // scanned and shuffled a SECOND time (the same pruning-breaks-reuse
-    // trap distributedRunningSum documents). max(bucket) now rides the
-    // totals aggregate; pin the single-scan shape.
+    // input, one global aggregate collecting the ≤ nBins-row histogram,
+    // and a one-row DriftMath finish. An earlier shape recomputed the
+    // metrics as broadcast-joined sub-plans with an nBins² sequence
+    // expansion (16 jobs per click); pin that none of it comes back.
     val (nScans, p) = executedScanCount(SparkEntry.queries("profile_drift_psi_ks")(spark, sf))
     assert(nScans == 1, s"expected exactly 1 input scan, got $nScans:\n${p.take(3000)}")
+    assert(!p.contains("BroadcastExchange") && !p.contains("Generate"),
+      s"expected no broadcast and no generator in the drift plan:\n${p.take(3000)}")
   }
 
   test("profile_topk_heavy: one broadcast candidate join, exactly two input scans") {

@@ -337,6 +337,36 @@ object CurationProps extends Properties("Curation") {
           row.getLong(row.fieldIndex("n_cur")) == tCur && ksMatches
     }
 
+  property("driftPsiKs: empty and all-null-bucket inputs ⇒ (0, 0, null, true, null)") =
+    Prop.forAll(Gen.listOf(Gen.oneOf(true, false))) { flags =>
+      // no bucket survives the null filter: the histogram is empty, so
+      // psi has no terms (null, not 0.0) and the gate fails closed
+      val allNull = flags.map((_, Option.empty[Int])).toDF("is_ref", "bucket")
+      Seq(allNull.limit(0), allNull).forall { df =>
+        GraftOps.driftPsiKs(df, "is_ref", "bucket", 10).head().toSeq ==
+          Seq(0L, 0L, null, true, null)
+      }
+    }
+
+  property("driftPsiKs: a long bucket column gives the same row as its int cast") =
+    Prop.forAll(Gen.listOf(Gen.zip(Gen.oneOf(true, false),
+        Gen.option(Gen.choose(0, 9))))) { rows =>
+      val df = rows.toDF("is_ref", "bucket")
+      GraftOps.driftPsiKs(df, "is_ref", "bucket", 10).head() ==
+        GraftOps.driftPsiKs(df.withColumn("bucket", col("bucket").cast("long")),
+          "is_ref", "bucket", 10).head()
+    }
+
+  property("driftPsiKs rejects a non-integral bucket column, naming it") = {
+    // a cast to int would silently truncate 1.5 and 1.9 into one bin
+    val df = Seq((true, 1.5), (false, 1.9)).toDF("is_ref", "score_bin")
+    Prop(scala.util.Try(GraftOps.driftPsiKs(df, "is_ref", "score_bin", 10)) match {
+      case scala.util.Failure(e: IllegalArgumentException) =>
+        e.getMessage.contains("score_bin")
+      case _ => false
+    })
+  }
+
   property("quotaPerGroup: duplicated quota keys collapse to the STRICTEST cap") =
     Prop.forAll(Gen.choose(1, 5), Gen.choose(6, 20)) { (lo, hi) =>
       val df = (0 until 30).map(i => ("g", i.toLong)).toDF("grp", "ord")
