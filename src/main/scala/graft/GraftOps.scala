@@ -48,22 +48,9 @@ object GraftOps {
     * shuffle joins when it is not. */
   def jaccardDuplicates(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3): DataFrame = {
-    import org.apache.spark.sql.functions.least
     val da = llm.Dedup.shingleArrays(df, idCol, textCol, n, dedup = true)
     llm.Dedup.verifyCandidates(da, llm.Dedup.candidatesFromArrays(da),
-      "jaccard", threshold,
-      (common, na, nb) => common.cast("double") / (na + nb - common))
-  }
-
-  /** same machinery scored by containment |A∩B|/min(|A|,|B|) — catches
-    * near-subset documents (boilerplate-wrapped copies) Jaccard dilutes. */
-  def containmentDuplicates(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, n: Int = 3): DataFrame = {
-    import org.apache.spark.sql.functions.least
-    val da = llm.Dedup.shingleArrays(df, idCol, textCol, n, dedup = true)
-    llm.Dedup.verifyCandidates(da, llm.Dedup.candidatesFromArrays(da),
-      "containment", threshold,
-      (common, na, nb) => common.cast("double") / least(na, nb))
+      "jaccard", threshold, llm.Dedup.jaccardScore)
   }
 
   /** THE one-call corpus dedup: LSH candidates → exact Jaccard verify
@@ -95,10 +82,6 @@ object GraftOps {
     * co-purchase edges) for `session`; returns how many were unpersisted. */
   def clearGraphCaches(session: org.apache.spark.sql.SparkSession): Int =
     ops.Graph.clearCaches(session)
-
-  /** open-vocabulary deterministic string id (polynomial hash, no
-    * dictionary state; mirrored exactly by the DuckDB-side list_reduce). */
-  def stringId(c: Column): Column = llm.Dedup.shingleId(c)
 
   /** native codegen Jaro-Winkler similarity (DuckDB-parity variant: empty
     * side → 0.0, prefix bonus only above the 0.7 boost threshold) — the
@@ -389,20 +372,17 @@ object GraftOps {
 
   /** connected components of an undirected pair list → (node, component);
     * turns near-dup candidate PAIRS into the transitive dedup CLUSTERS a
-    * keep-one-per-group policy needs. Per-round checkpointing is LOCAL by
-    * default (fast, not executor-loss-safe); pass `checkpointDir` (HDFS/
-    * object-store path) for reliable checkpoints on a real cluster.
-    * `algorithm`: `"auto"` (default) runs min-label propagation with a
-    * small round budget — the cheap shape for dedup's near-clique
-    * components — and falls back to alternating large-star/small-star
-    * edge contraction (O(log n) rounds on ANY graph) if that budget is
-    * exhausted, so adversarial high-diameter graphs (long chains) never
-    * degrade; `"labelprop"` / `"two-phase"` pin one algorithm. */
+    * keep-one-per-group policy needs. Min-label propagation with path
+    * compression: dedup near-cliques converge in 2 rounds and a path whose
+    * ids increase along it in ~log₂(hops), but a path with scrambled ids
+    * takes ~hops/3 rounds; past the fixed 30-round budget the call throws
+    * `IllegalStateException` instead of returning split components.
+    * Per-round checkpointing is LOCAL by default (fast, not
+    * executor-loss-safe); pass `checkpointDir` (HDFS/object-store path)
+    * for reliable checkpoints on a real cluster. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 20, checkpointDir: Option[String] = None,
-      algorithm: String = "auto"): DataFrame =
-    llm.Dedup.connectedComponents(pairs, aCol, bCol, maxRounds, checkpointDir,
-      algorithm)
+      checkpointDir: Option[String] = None): DataFrame =
+    llm.Dedup.connectedComponents(pairs, aCol, bCol, checkpointDir)
 
   /** SCD Type-2 history: version a change stream into validity intervals
     * (valid_from/valid_to/is_current per key, next-change-closes-interval)

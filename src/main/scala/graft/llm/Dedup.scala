@@ -184,7 +184,7 @@ object Dedup {
       |         GROUP BY 1, 2)""".stripMargin
 
   /** shared Jaccard score shape: |A∩B| / |A∪B| over (common, |A|, |B|). */
-  private val jaccardScore: (Column, Column, Column) => Column =
+  private[graft] val jaccardScore: (Column, Column, Column) => Column =
     (common, na, nb) => common.cast("double") / (na + nb - common)
 
   /** PUBLIC API: end-to-end corpus dedup — LSH candidates → exact n-gram
@@ -290,8 +290,7 @@ object Dedup {
     // join at all. The arrays are persisted ONCE per (session, dir)
     // (docArraysCached); long-lived services should unpersist.
     "dedup_ngram_jaccard" -> { (s, dir) =>
-      verifiedPairs(s, dir, "jaccard", 0.3,
-        (common, na, nb) => common.cast("double") / (na + nb - common))
+      verifiedPairs(s, dir, "jaccard", 0.3, jaccardScore)
     },
 
     // top-k similarity SEARCH over the same LSH machinery (the EDBT
@@ -304,8 +303,7 @@ object Dedup {
     "sim_topk_pairs" -> { (s, dir) =>
       val da = docArraysCached(s, dir)
       val cand = candidatesFromArrays(da)
-      verifyCandidates(da, cand, "jaccard", 0.0,
-        (common, na, nb) => common.cast("double") / (na + nb - common))
+      verifyCandidates(da, cand, "jaccard", 0.0, jaccardScore)
         .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b"))
         .limit(20)
     },
@@ -385,72 +383,29 @@ object Dedup {
 
   /** PUBLIC API: connected components of an undirected pair/edge list —
     * output (node, component) where component = min node id reachable.
-    * Min-label propagation with per-round PATH COMPRESSION (lab ← lab(lab)),
-    * so convergence needs ~log₂(diameter) rounds, not diameter — a 2²⁰-hop
-    * chain fits the default budget. Each round is two equi-joins + a hash
-    * agg, all scale-out shuffles on node id; the only driver-side value per
-    * round is the "did any label change" boolean — the standard
-    * iterative-algorithm convergence scalar, not a data collect. Throws if
-    * the round budget is exhausted rather than returning split components
-    * (maxRounds counts the fused init plus at least one confirm round, so
-    * it must be ≥ 2). Checkpointing (required — the compression self-join
+    * Min-label propagation with per-round PATH COMPRESSION (lab ← lab(lab)).
+    * The round count depends on how ids lie along the paths, not only on
+    * the diameter: dedup near-cliques converge in 2 rounds, and a path
+    * whose ids increase along it in ~log₂(hops) (14 rounds for 10⁴ hops),
+    * but a path with scrambled ids needs ~hops/3 (40 rounds for 100 hops
+    * over ids (37·i) mod 101). Each round is two equi-joins + a hash agg,
+    * all scale-out shuffles on node id; the only driver-side value per
+    * round is the "did any label change" count — the standard
+    * iterative-algorithm convergence scalar, not a data collect. Throws
+    * `IllegalStateException` once [[MaxRounds]] rounds (the fused init
+    * included) pass without convergence, rather than returning split
+    * components. Checkpointing (required — the compression self-join
     * doubles the logical plan per round): by default LOCAL, which is fast
     * but not recomputable after executor loss; pass `checkpointDir` (an
     * HDFS/object-store path on a cluster) to switch every round to
     * reliable `DataFrame.checkpoint` — the fault-tolerant mode a 100 TB
-    * run needs, same call shape, verified by PropertiesSpec. Per-round
-    * label copies are node-sized and reclaimed by the ContextCleaner
-    * as each round's reference is dropped; edges are unpersisted here even
+    * run needs, same call shape, verified by GraftOpsSpec. Per-round
+    * label copies are node-sized and reclaimed by the ContextCleaner as
+    * each round's reference is dropped; edges are unpersisted here even
     * on failure.
-    *
-    * `algorithm`: `"auto"` (default), `"labelprop"` — min-label
-    * propagation with path compression; the right shape for dedup graphs,
-    * whose components are near-cliques that converge in ~2 rounds — or
-    * `"two-phase"` — the alternating large-star/small-star edge
-    * contraction of Kiveris et al. (MapReduce CC, "The Alternating
-    * Algorithm"), which guarantees O(log n) ROUNDS on any graph and —
-    * unlike label propagation, which carries a (node → label) row for
-    * EVERY node through EVERY round — shrinks the edge set as it
-    * contracts, so adversarial long-chain / high-diameter graphs don't
-    * degrade. `"auto"` runs labelprop with a small round budget
-    * ([[AutoLabelPropRounds]] — covers every dedup-shaped graph and any
-    * diameter ≲ 2⁶) and, if that budget is exhausted without convergence,
-    * RESTARTS on two-phase with the full `maxRounds` — so callers get
-    * labelprop's cheap rounds on typical graphs and two-phase's O(log n)
-    * bound on adversarial ones without choosing up front. Same output
-    * contract for all three.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxRounds: Int = 20, checkpointDir: Option[String] = None,
-      algorithm: String = "auto"): DataFrame = algorithm match {
-    case "auto" =>
-      // wasted-work bound on fallback: AutoLabelPropRounds node-sized
-      // rounds (the graphs that defeat labelprop are long chains, whose
-      // per-round cost is small precisely because components are thin)
-      labelPropOpt(pairs, aCol, bCol,
-          math.max(2, math.min(maxRounds, AutoLabelPropRounds)), checkpointDir)
-        .getOrElse(
-          connectedComponentsTwoPhase(pairs, aCol, bCol, maxRounds, checkpointDir))
-    case "labelprop" =>
-      labelPropOpt(pairs, aCol, bCol, maxRounds, checkpointDir).getOrElse(
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxRounds rounds"))
-    case "two-phase" =>
-      connectedComponentsTwoPhase(pairs, aCol, bCol, maxRounds, checkpointDir)
-    case other => throw new IllegalArgumentException(
-      s"unknown CC algorithm '$other' (auto | labelprop | two-phase)")
-  }
-
-  /** labelprop round budget the AUTO path spends before switching to
-    * two-phase: path compression converges in ~log₂(diameter) rounds, so
-    * 6 rounds cover any diameter ≲ 2⁶ — far beyond any dedup graph. */
-  val AutoLabelPropRounds = 6
-
-  /** min-label propagation; None = round budget exhausted WITHOUT
-    * convergence (never a partially-converged labeling). */
-  private def labelPropOpt(pairs: DataFrame, aCol: String,
-      bCol: String, maxRounds: Int, checkpointDir: Option[String]): Option[DataFrame] = {
-    require(maxRounds >= 2, "maxRounds must be >= 2 (init + one confirm round)")
+      checkpointDir: Option[String] = None): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     def save(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
@@ -479,7 +434,7 @@ object Dedup {
     var done = false
     var rounds = 1
     try {
-      while (!done && rounds < maxRounds) {
+      while (!done && rounds < MaxRounds) {
         // carry each node's PREVIOUS label through the fused agg (labels
         // contributes exactly one row per node, prop rows carry null, so
         // max(__old) is that previous label — no extra join): the
@@ -523,94 +478,15 @@ object Dedup {
         rounds += 1
       }
     } finally edges.unpersist()
-    if (done) Some(labels.select(col("node"), col("lab").as("component")))
-    else None
+    if (!done) throw new IllegalStateException(
+      s"connectedComponents did not converge in $MaxRounds rounds")
+    labels.select(col("node"), col("lab").as("component"))
   }
 
-  /** Alternating large-star/small-star CC (Kiveris et al., public
-    * MapReduce-CC literature). Edges are kept CANONICAL (u > v) and each
-    * round rewrites them:
-    *
-    *  - large-star(u): every neighbor v > u re-attaches to
-    *    m = min(Γ(u) ∪ {u}) — emit (v, m);
-    *  - small-star(u): all smaller neighbors (and u itself) attach to
-    *    m = min(Γ⁻(u) ∪ {u}) — emit (u, m) and (v, m) for v ∈ Γ⁻(u)\{m}.
-    *
-    * The fixed point is one star per component centered at its min node,
-    * reached in O(log n) alternating rounds on ANY graph — including the
-    * long-chain adversary where plain label propagation pays diameter
-    * rounds. Convergence check: a (count, sum-of-edge-hashes) signature
-    * per round — two driver scalars, no data collect — CONFIRMED by an
-    * exact `except` both ways before returning (a signature collision can
-    * therefore never return split components; it would only cost one
-    * wasted confirm). Per-round checkpointing and the reliable-vs-local
-    * choice follow the label-prop path exactly. */
-  private def connectedComponentsTwoPhase(pairs: DataFrame, aCol: String,
-      bCol: String, maxRounds: Int, checkpointDir: Option[String]): DataFrame = {
-    require(maxRounds >= 2, "maxRounds must be >= 2")
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def save(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    val p = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    // nodes remembered up front: edge contraction erases singleton
-    // components (self-pairs) and, at the end, star centers — both must
-    // still appear in the output with component = min reachable (= self
-    // for singletons, = the center id for centers).
-    val nodes = save(
-      p.select(col("a").as("node")).unionByName(p.select(col("b").as("node")))
-        .distinct())
-    var edges = save(
-      p.where(col("a") =!= col("b"))
-        .select(greatest(col("a"), col("b")).as("u"),
-          least(col("a"), col("b")).as("v"))
-        .distinct())
-    // hash sum as decimal(38,0): a long sum overflow-faults under ANSI
-    def signature(e: DataFrame): (Long, BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
-    }
-    var sig = signature(edges)
-    var done = sig._1 == 0L // count rides the signature — no extra job
-    var rounds = 0
-    while (!done && rounds < maxRounds) {
-      // LARGE-STAR over the full adjacency (both directions); the result
-      // feeds both small-star aggregations, so persist it for the round
-      val adj = edges.unionByName(
-        edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = adj.groupBy(col("u"))
-        .agg(least(min(col("v")), col("u")).as("m"))
-      val ls = adj.join(mins, "u").where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v")).distinct()
-        .persist()
-      try {
-        // SMALL-STAR on the canonical (u > v) edges
-        val mins2 = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-        val withM = ls.join(mins2, "u")
-        val next = save(
-          withM.select(col("v").as("u"), col("m").as("v"))
-            .where(col("u") =!= col("v"))
-            .unionByName(mins2.select(col("u"), col("m").as("v")))
-            .distinct())
-        val nextSig = signature(next)
-        if (nextSig == sig) {
-          // exact confirm — immunizes against a signature collision
-          done = next.exceptAll(edges).isEmpty && edges.exceptAll(next).isEmpty
-        }
-        sig = nextSig
-        edges = next
-      } finally ls.unpersist()
-      rounds += 1
-    }
-    require(done, s"two-phase CC did not converge in $maxRounds rounds")
-    // stars: (leaf u → center v); centers and singletons label themselves
-    nodes
-      .join(edges.select(col("u").as("node"), col("v").as("component")),
-        Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("component"), col("node")).as("component"))
-  }
+  /** round budget of [[connectedComponents]], the fused init included;
+    * the co-purchase giant (graph_component_sizes) is the deepest graph a
+    * declared query builds. */
+  private val MaxRounds = 30
 
   val oracle: Map[String, String] = Map(
     "dedup_minhash" ->

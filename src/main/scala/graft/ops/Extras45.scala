@@ -55,14 +55,14 @@ object Extras45 {
 
     // Component-size census of the strong co-purchase graph: the CC
     // kernel on a second graph shape beyond the dedup cluster graph.
-    // The giant co-purchase component's diameter exceeds the AUTO
-    // path's 6-round labelprop budget, which made auto restart on
-    // two-phase (13.6 s); labelprop with an adequate budget converges
-    // directly (3.8 s, flat 10x exponent — rounds, not data, dominate).
-    // 30 rounds cover diameter ≲ 2³⁰ with per-round convergence exit;
-    // nonconvergence fails loudly rather than silently degrading.
-    // Output is the size histogram — |distinct sizes| rows, bounded far
-    // below the node count at any SF.
+    // The giant co-purchase component takes more rounds than any dedup
+    // graph (3.8 s at sf0.1, flat 10x exponent — rounds, not data,
+    // dominate) but converges well inside the kernel's 30-round budget;
+    // how many rounds a component needs depends on how its ids lie
+    // along its paths, not on the diameter alone, and nonconvergence
+    // fails loudly rather than silently degrading. Output is the size
+    // histogram — |distinct sizes| rows, bounded far below the node
+    // count at any SF.
     "graph_component_sizes" -> { (s, dir) =>
       val edges = Graph.strongEdgesCached(s, dir).select("pa", "pb")
       // r14 note: a pointer-doubling variant (2 compression hops/round)
@@ -70,8 +70,7 @@ object Extras45 {
       // A/B, same session): convergence here is bound by min-label
       // PROPAGATION along edges, not label-chain depth, so the extra
       // per-round join bought nothing.
-      graft.llm.Dedup.connectedComponents(edges, "pa", "pb",
-        algorithm = "labelprop", maxRounds = 30)
+      graft.llm.Dedup.connectedComponents(edges, "pa", "pb")
         .groupBy("component").agg(count(lit(1)).as("sz"))
         .groupBy("sz").agg(count(lit(1)).as("n_components"))
         .orderBy("sz")

@@ -45,9 +45,9 @@ class GraftOpsSpec extends SparkSuite {
   }
 
   test("connectedComponents handles a long path graph (path compression)") {
-    // a 60-hop chain needs ~diameter rounds under plain min-label
-    // propagation — far past the round budget; per-round path compression
-    // brings it to ~log2(60)
+    // a 60-hop chain with ids increasing along it needs ~diameter rounds
+    // under plain min-label propagation; per-round path compression
+    // brings it to ~log2(60) (scrambled ids would not get that speedup)
     val pairs = (1L until 60L).map(i => (i, i + 1)).toDF("a", "b")
     val cc = GraftOps.connectedComponents(pairs, "a", "b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -65,16 +65,14 @@ class GraftOpsSpec extends SparkSuite {
     assert(cc.length == 60 && cc.forall(_._2 == 1L))
   }
 
-  test("two-phase CC: adversarial 10^4-hop chain converges within the round budget") {
-    // the case the algorithm exists for: a path graph of diameter 10^4.
-    // Alternating large-star/small-star contracts it in O(log n) rounds;
-    // every node must land in component 0, including both endpoints, a
-    // singleton self-pair, and a separate clique.
+  test("connectedComponents: a sorted 10^4-hop chain converges within the round budget") {
+    // ids increase along the path, so path compression needs ~log2(10^4)
+    // = 14 rounds; every node must land in component 0, including both
+    // endpoints, a singleton self-pair, and a separate clique.
     val chain = (0L until 10000L).map(i => (i, i + 1))
     val extras = Seq((20000L, 20000L), (30000L, 30001L), (30001L, 30002L),
       (30000L, 30002L))
-    val cc = GraftOps.connectedComponents((chain ++ extras).toDF("a", "b"),
-        "a", "b", algorithm = "two-phase")
+    val cc = GraftOps.connectedComponents((chain ++ extras).toDF("a", "b"), "a", "b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(cc.size == 10005)
     assert((0L to 10000L).forall(cc(_) == 0L), "chain not fully contracted")
@@ -82,35 +80,16 @@ class GraftOpsSpec extends SparkSuite {
     assert(Seq(30000L, 30001L, 30002L).forall(cc(_) == 30000L))
   }
 
-  test("AUTO CC falls back to two-phase on an adversarial 10^4-hop chain") {
-    // the default path: labelprop spends its small AUTO budget
-    // (AutoLabelPropRounds), fails to converge on diameter 10^4, and the
-    // fallback restart on two-phase must still produce exact components —
-    // callers never choose an algorithm up front and never see a failure
-    val chain = (0L until 10000L).map(i => (i, i + 1))
-    val extras = Seq((20000L, 20000L), (30000L, 30001L))
-    val cc = GraftOps.connectedComponents((chain ++ extras).toDF("a", "b"), "a", "b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(cc.size == 10004)
-    assert((0L to 10000L).forall(cc(_) == 0L), "chain not fully contracted")
-    assert(cc(20000L) == 20000L && cc(30001L) == 30000L)
-  }
-
-  test("two-phase CC matches label propagation on a mixed graph") {
-    val pairs = Seq((2L, 1L), (2L, 3L), (7L, 8L), (9L, 9L), (4L, 8L))
-      .toDF("a", "b")
-    def run(alg: String) = GraftOps.connectedComponents(pairs, "a", "b",
-      algorithm = alg).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(run("two-phase") == run("labelprop"))
-  }
-
-  test("two-phase CC converges with reliable checkpointing enabled") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
-    val pairs = (1L until 200L).map(i => (i, i + 1)).toDF("a", "b")
-    val cc = GraftOps.connectedComponents(pairs, "a", "b",
-        checkpointDir = Some(dir), algorithm = "two-phase")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(cc.length == 200 && cc.forall(_._2 == 1L))
+  test("connectedComponents fails naming its round budget on a scrambled-id path") {
+    // a 100-edge path over ids (37·i) mod 101: the minimum label crawls
+    // along it (40 rounds), past the 30-round budget — the call must
+    // throw rather than return split components
+    val ids = (0 to 100).map(i => (37L * i) % 101L)
+    val pairs = ids.zip(ids.tail).toDF("a", "b")
+    val e = intercept[IllegalStateException] {
+      GraftOps.connectedComponents(pairs, "a", "b")
+    }
+    assert(e.getMessage.contains("30 rounds"), e.getMessage)
   }
 
   test("jaccardDuplicates verifies the planted near-dup with its exact score") {
