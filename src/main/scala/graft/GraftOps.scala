@@ -28,13 +28,6 @@ object GraftOps {
   def shingleSet(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
     llm.Dedup.shingleSet(df, idCol, textCol, n)
 
-  /** (doc_id, sh) with the n-gram shingle ARRAY kept whole — the preferred
-    * signature input: minhash/simhash read it map-side, nothing shuffles
-    * until the candidate join. */
-  def shingleArrays(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, dedup: Boolean = false): DataFrame =
-    llm.Dedup.shingleArrays(df, idCol, textCol, n, dedup)
-
   /** MinHash-LSH candidate pairs (doc_a, doc_b, n_bands) over a shingle set. */
   def minhashCandidates(sh: DataFrame): DataFrame = llm.Dedup.candidatesFrom(sh)
 
@@ -171,7 +164,8 @@ object GraftOps {
 
   /** multi-value [[distributedRunningSum]]: every (valueCol, outCol)
     * pair cumulates over the SAME (part, order) spine through ONE range
-    * exchange, offsets aggregate, and window pass — N separate calls
+    * exchange, offsets aggregate, and window pass (the window adds its
+    * own hashpartitioning(part, __shard) exchange) — N separate calls
     * pay N of each (an ECDF pair is exactly this shape). */
   def distributedRunningSums(df: DataFrame, partCol: String, orderCol: String,
       valueOuts: Seq[(String, String)], exclusive: Boolean = false,
@@ -187,18 +181,6 @@ object GraftOps {
   def distributedLag(df: DataFrame, partCol: String, orderCols: Seq[String],
       valueCol: String, outCol: String, shards: Int = 0): DataFrame =
     llm.Chunking.distributedLag(df, partCol, orderCols, valueCol, outCol, shards)
-
-  /** distributed sessionization: per-key 1-based session ids over a long
-    * µs timestamp with a max-gap rule — the [[sessionize]] semantics
-    * computed as ONE range exchange + ONE window pass + a ≤ (shards−1)
-    * row boundary-correction broadcast, so a hot key never funnels its
-    * whole event run through a single task. `tieCols` must make
-    * (ts, ties) unique per key. */
-  def distributedSessionize(df: DataFrame, partCol: String, tsCol: String,
-      tieCols: Seq[String], gapMicros: Long, outCol: String,
-      shards: Int = 0): DataFrame =
-    llm.Chunking.distributedSessionize(df, partCol, tsCol, tieCols, gapMicros,
-      outCol, shards)
 
   /** budget-capped corpus selection: keep each `streamCol` stream's rows
     * in ascending `priorityCol` order until the running `tokenCol` total
@@ -242,9 +224,6 @@ object GraftOps {
   def withUnitVector(df: DataFrame, raw: Column): DataFrame =
     llm.Similarity.withUnit(df, raw)
 
-  /** codegen'd dot product of two unit vectors (= cosine). */
-  def cosine(a: Column, b: Column): Column = llm.Similarity.cosine(a, b)
-
   /** exact top-k neighbours; inputs carry (qid, qv) / (vec_id, v).
     * Brute-force kernel (|queries|×|candidates| dot products) — bound the
     * query batch, or use [[knnBlocked]] / [[annIvf]] for open query sets. */
@@ -272,22 +251,6 @@ object GraftOps {
     * clusters kept as zero rows) — the corpus-diversity dashboard. */
   def ivfClusterStats(vectors: DataFrame, centroids: DataFrame): DataFrame =
     llm.Similarity.ivfClusterStats(vectors, centroids)
-
-  /** one distributed Lloyd iteration: assign (vec_id, v) unit vectors to
-    * their nearest (cid, cv) centroid, return element-wise member means
-    * as (cid, pos, n_members, c_val) — empty clusters absent (callers
-    * keep the previous centroid). Broadcast-centroid assignment +
-    * narrow (cid, pos, x) aggregate; see [[llm.Similarity.kmeansUpdate]]. */
-  def kmeansUpdate(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    llm.Similarity.kmeansUpdate(vectors, centroids)
-
-  /** `iters` Lloyd steps from an initial (cid, cv) set (see
-    * [[ivfCentroids]] for the seed): per-round mean fold-back with
-    * unit re-normalization, emptied clusters keep their previous
-    * centroid, lineage truncated per round. Returns the trained
-    * (cid, cv) set for [[annIvf]]/[[semanticDedup]]. */
-  def kmeansTrain(vectors: DataFrame, initial: DataFrame, iters: Int): DataFrame =
-    llm.Similarity.kmeansTrain(vectors, initial, iters)
 
   /** pairs within a blocking column whose cosine ≥ threshold. */
   def cosineThresholdPairs(df: DataFrame, blockCol: String, threshold: Double): DataFrame =
@@ -384,30 +347,28 @@ object GraftOps {
       checkpointDir: Option[String] = None): DataFrame =
     llm.Dedup.connectedComponents(pairs, aCol, bCol, checkpointDir)
 
-  /** SCD Type-2 history: version a change stream into validity intervals
-    * (valid_from/valid_to/is_current per key, next-change-closes-interval)
-    * — the keep-history complement of [[upsertLatestWins]]. */
   /** distributed global row_number over a UNIQUE orderCols composite —
-    * the two-level prefix sum, never a single-partition window
-    * ([[ops.Extras7.distributedRank]]). */
+    * the two-level prefix sum, never a single-partition window; the whole
+    * row rides inside the rank struct, so nothing joins back
+    * ([[llm.Chunking.distributedRank]]). */
   def distributedRank(df: DataFrame, orderCols: Seq[String],
       outCol: String): DataFrame =
-    ops.Extras7.distributedRank(df, orderCols, outCol)
+    llm.Chunking.distributedRank(df, orderCols, outCol)
 
   /** distributed ntile(k) over a UNIQUE orderCols composite — SQL-ntile
     * positional semantics via the two-level prefix sum, never a
-    * single-partition window (see [[ops.Extras7.distributedNtile]]). */
+    * single-partition window (see [[llm.Chunking.distributedNtile]]). */
   def distributedNtile(df: DataFrame, orderCols: Seq[String], k: Int,
       outCol: String): DataFrame =
-    ops.Extras7.distributedNtile(df, orderCols, k, outCol)
+    llm.Chunking.distributedNtile(df, orderCols, k, outCol)
 
   /** per-group distributed ntile(k) — ONE kernel pass ranks every group
     * over the shared (byCol, orderCols) spine; tag-and-union N metrics to
-    * get N ntiles for one range exchange
-    * ([[ops.Extras7.distributedNtileBy]]). */
+    * get N ntiles for one range exchange and one window pass
+    * ([[llm.Chunking.distributedNtileBy]]). */
   def distributedNtileBy(df: DataFrame, byCol: String, orderCols: Seq[String],
       k: Int, outCol: String): DataFrame =
-    ops.Extras7.distributedNtileBy(df, byCol, orderCols, k, outCol)
+    llm.Chunking.distributedNtileBy(df, byCol, orderCols, k, outCol)
 
   /** sorted-neighborhood record-linkage candidates: pairs within
     * `window` global sort positions, ranked via the distributed prefix
@@ -416,13 +377,6 @@ object GraftOps {
   def sortedNeighborhoodPairs(names: DataFrame, valCol: String,
       window: Int): DataFrame =
     clean.StringClean.sortedNeighborhoodPairs(names, valCol, window)
-
-  /** per-document interpolated bigram surprisal (self-trained corpus LM,
-    * [[llm.Mix.bigramSurprisal]]) — the order-sensitive quality signal
-    * over [[unigramSurprisal]]. */
-  def bigramSurprisal(df: DataFrame, idCol: String, textCol: String,
-      lambda: Double = 0.9): DataFrame =
-    llm.Mix.bigramSurprisal(df, idCol, textCol, lambda)
 
   /** exact interval-overlap self-join via time-cell bucketing +
     * first-shared-cell pair ownership — never a theta-join nested loop
@@ -461,6 +415,9 @@ object GraftOps {
   def triangleStats(edges: DataFrame): DataFrame =
     ops.Graph.triangleStats(edges)
 
+  /** SCD Type-2 history: version a change stream into validity intervals
+    * (valid_from/valid_to/is_current per key, next-change-closes-interval)
+    * — the keep-history complement of [[upsertLatestWins]]. */
   def scd2History(changes: DataFrame, keyCol: String, tsCol: String,
       tieCols: Seq[String] = Nil): DataFrame =
     ops.Extras6.scd2History(changes, keyCol, tsCol, tieCols)
@@ -484,9 +441,17 @@ object GraftOps {
   def validate(df: DataFrame, rules: Seq[clean.Rule]): DataFrame =
     clean.Validate.validate(df, rules)
 
-  /** per-key session ids with a max inactivity gap (batch gaps-and-islands;
-    * streaming path = StreamOps.sessions). */
+  /** batch sessionization: per-key 1-based session ids over a LONG µs
+    * timestamp, a new session opening at a key's first row, after a null
+    * timestamp, or after a gap > `gapMicros`; `tieCols` must make
+    * (ts, ties) unique per key (streaming path = StreamOps.sessions).
+    * The range-split kernel: one range exchange, one window pass over
+    * (key, shard) — which adds its own full-data hashpartitioning
+    * exchange — and a ≤ (shards−1) row boundary-correction broadcast, so
+    * a hot key never funnels its whole event run through a single task
+    * ([[llm.Chunking.sessionize]]). */
   def sessionize(df: DataFrame, keyCol: String, tsCol: String,
-      gapSeconds: Long, orderCols: Seq[String] = Nil): DataFrame =
-    streaming.StreamOps.sessionize(df, keyCol, tsCol, gapSeconds, orderCols)
+      tieCols: Seq[String], gapMicros: Long, outCol: String,
+      shards: Int = 0): DataFrame =
+    llm.Chunking.sessionize(df, keyCol, tsCol, tieCols, gapMicros, outCol, shards)
 }

@@ -152,7 +152,7 @@ object Profile2 {
     // single-partition sort); the rollup after it is 10 rows.
     "profile_histogram_equidepth" -> { (s, dir) =>
       val o = Tables(s, dir, "orders").select("o_orderkey", "o_totalprice")
-      graft.ops.Extras7.distributedNtile(
+      graft.GraftOps.distributedNtile(
           o, Seq("o_totalprice", "o_orderkey"), 10, "bucket")
         .groupBy("bucket")
         .agg(count(lit(1)).as("n"),

@@ -162,7 +162,7 @@ object StringClean {
   def sortedNeighborhoodPairs(names: DataFrame, valCol: String,
       window: Int): DataFrame = {
     require(window >= 1, s"sortedNeighborhoodPairs needs window >= 1, got $window")
-    val ranked = graft.ops.Extras7.distributedRank(names, Seq(valCol), "rn")
+    val ranked = graft.GraftOps.distributedRank(names, Seq(valCol), "rn")
     val a = ranked.select(col(valCol).as("val_a"), col("rn").as("rn_a"))
       .withColumn("bkt", explode(array(
         expr(s"(rn_a - 1) DIV $window"), expr(s"(rn_a - 1) DIV $window + 1"))))

@@ -2,7 +2,7 @@ package graft.llm
 
 import graft._
 import graft.Tables._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,6 +38,10 @@ import org.apache.spark.sql.functions._
   * Deterministic — shard BOUNDARIES come from range-partitioner sampling
   * and may vary run to run, but offset+local is the exact global running
   * sum regardless of where the cuts land, so pack_id never changes.
+  *
+  * This object is also the one home of the distributed window kernels
+  * built on that split: running sums and maxima, lag, sessionize, rank
+  * and ntile. Callers reach them through [[graft.GraftOps]].
   */
 object Chunking {
 
@@ -106,7 +110,11 @@ object Chunking {
     * split into `shards` contiguous runs (default
     * spark.sql.shuffle.partitions), a per-(group, shard) local window
     * cumsum — parallelism = shards, never the group count — and a
-    * broadcast per-shard offset table added map-side. The result is
+    * broadcast per-shard offset table added map-side. The window's
+    * partitionBy(group, shard) adds a second full-data exchange,
+    * hashpartitioning(group, __shard), over the range-split rows
+    * (PLANS.md pipeline_pack_sequences node (7)); every kernel here
+    * that windows per (group, shard) pays it. The result is
     * provably independent of the shard count (offset + local = the exact
     * global running sum wherever the cuts land). `exclusive = true`
     * sums strictly-preceding rows (0 for each group's first row);
@@ -126,7 +134,8 @@ object Chunking {
   /** multi-value form of [[distributedRunningSum]]: each `(valueCol,
     * outCol)` pair gets its exact global running sum over the SAME
     * (part, order) spine — one range exchange, one offsets aggregate,
-    * and one window pass shared across all the cumulatives (N separate
+    * and one window pass (with its hash exchange) shared across all the
+    * cumulatives (N separate
     * kernel invocations would pay N of each; drift_ks' ECDF pair was
     * 2×). Semantics per pair are identical to the single form. */
   def distributedRunningSums(df: DataFrame, partCol: String, orderCol: String,
@@ -399,35 +408,33 @@ object Chunking {
       .drop("__shard", "__rn", "__lv", "__ckey", "__cshard", "__ptv")
   }
 
-  /** PUBLIC API: distributed sessionization — per-`partCol` 1-based
-    * `outCol` session ids over a LONG microsecond `tsCol`, a new session
-    * opening when the gap to the previous row exceeds `gapMicros` — the
-    * distributed form of StreamOps.sessionize's lag + running-sum window
-    * pair, for groups too big or too hot for one task (a ~10% hot user
-    * makes the single-task double window the first thing to break on a
-    * skewed 100 TB event log — SKEW_PROBE's events_sequence_pairs 4.35×).
-    * One range exchange, ONE window pass computing the within-(group,
-    * shard) lag gap-flag and its local cumsum together, then a boundary
-    * correction at (group, shard) grain: each spanning shard's first-row
-    * flag is decided against the previous shard's tail timestamp, and
-    * its session offset is the prior shards' flag totals. Only
-    * shard-spanning rows survive the correction filter (≤ shards − 1
-    * rows broadcast, at any group cardinality); non-spanning rows take
-    * the constant default (+1 for the group's opening session). The
-    * window OUTPUT feeds both the correction aggregate and the final
-    * join, so it is localCheckpoint-materialized (lazy, reclaimed with
-    * the result — the connectedComponents lifecycle); carried columns
-    * therefore ride through without a join-back. `tieCols` must make
-    * (ts, ties) unique per group. Result = exactly the single-window
-    * form's session ids, independent of the shard count. */
-  def distributedSessionize(df: DataFrame, partCol: String, tsCol: String,
+  /** PUBLIC API: batch sessionization — per-`partCol` 1-based `outCol`
+    * session ids over a LONG microsecond `tsCol`. A row opens a session
+    * when it has no predecessor in its group, when the predecessor's
+    * timestamp is null, or when the gap to it exceeds `gapMicros` — the
+    * single-window lag + running-sum rule (nulls sort first, so each
+    * null-timestamp row is a session of its own). Range-split so a hot
+    * key never funnels its event run through one task (SKEW_PROBE read
+    * 4.35× on the per-key double window under a ~10% hot user): one
+    * range exchange, then ONE window pass over (group, shard) — with its
+    * own full-data hashpartitioning exchange — computing the gap flag
+    * and its local cumsum, then a boundary correction at (group, shard)
+    * grain: a spanning shard's first-row flag is decided against the
+    * previous shard's tail timestamp, and its offset is the prior
+    * shards' flag totals. Only shard-spanning rows travel (≤ shards − 1,
+    * broadcast); the rest take the +1 default. The window OUTPUT feeds
+    * the correction aggregate and the final join, so it is lazily
+    * localCheckpointed; carried columns ride through without a
+    * join-back. `tieCols` must make (ts, ties) unique per group; null
+    * keys form one group; ids do not depend on the shard count. */
+  def sessionize(df: DataFrame, partCol: String, tsCol: String,
       tieCols: Seq[String], gapMicros: Long, outCol: String,
       shards: Int = 0): DataFrame = {
-    val reserved = Seq("__shard", "__rn", "__lns", "__lcum", "__fst", "__lst",
-      "__pts", "__nsf", "__corr", "__ckey", "__cshard")
+    val reserved = Seq("__shard", "__lns", "__lcum", "__fst", "__lst",
+      "__has", "__pts", "__nsf", "__corr", "__ckey", "__cshard")
     require(!df.columns.exists(reserved.contains) && !reserved.contains(outCol) &&
       !df.columns.contains(outCol),
-      s"distributedSessionize reserves ${reserved.mkString(", ")} and $outCol")
+      s"sessionize reserves ${reserved.mkString(", ")} and $outCol")
     val spark = df.sparkSession
     val nShards =
       if (shards > 0) shards else spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -442,10 +449,11 @@ object Chunking {
     // slimIn = true: the range-split data has a single consumer here
     // (the window OUTPUT is what feeds two — tails aggregate + final
     // join — and it is localCheckpoint-materialized below).
+    val prev = lag(col(tsCol), 1).over(wls)
     val local = shardSplit(df, col(partCol) +: ord, nShards, slimIn = true)
       .withColumn("__lns",
         when(lag(lit(1), 1).over(wls).isNull, 0L)
-          .when(col(tsCol) - lag(col(tsCol), 1).over(wls) > gapMicros, 1L)
+          .when(prev.isNull || col(tsCol) - prev > gapMicros, 1L)
           .otherwise(0L))
       .withColumn("__lcum", sum(col("__lns")).over(wRun))
       .drop("__lns")
@@ -458,11 +466,14 @@ object Chunking {
       .agg(min(struct(ordAliased: _*)).as("__fst"),
         max(struct(ordAliased :+ col("__lcum").as("__lc"): _*)).as("__lst"))
     val wS = Window.partitionBy(col(partCol)).orderBy(col("__shard"))
+    // __has marks "a previous shard of this group exists" apart from the
+    // previous tail TIMESTAMP, which may itself be null (the
+    // distributedLag discipline).
     val corr = tails
+      .withColumn("__has", lag(lit(1), 1).over(wS))
       .withColumn("__pts", lag(col("__lst.__o0"), 1).over(wS))
       .withColumn("__nsf",
-        when(col("__pts").isNull, 1L)
-          .when(col("__fst.__o0") - col("__pts") > gapMicros, 1L)
+        when(col("__pts").isNull || col("__fst.__o0") - col("__pts") > gapMicros, 1L)
           .otherwise(0L))
       .withColumn("__corr",
         sum(col("__nsf")).over(
@@ -472,7 +483,7 @@ object Chunking {
       // a group's FIRST shard always corrects by exactly +1 (its opening
       // session) — the join-miss default below — so only shard-spanning
       // rows need to travel: ≤ shards − 1 of them exist.
-      .where(col("__pts").isNotNull)
+      .where(col("__has").isNotNull)
       .select(col(partCol).as("__ckey"), col("__shard").as("__cshard"),
         col("__corr"))
     local
@@ -481,6 +492,105 @@ object Chunking {
         "left")
       .withColumn(outCol, col("__lcum") + coalesce(col("__corr"), lit(1L)))
       .drop("__shard", "__lcum", "__ckey", "__cshard", "__corr")
+  }
+
+  /** PUBLIC API: distributed global rank — `row_number().over(
+    * orderBy(orderCols))` without the single-partition window a global
+    * ORDER plans (the scale-killer PlanSpec rejects). Positions come
+    * from [[distributedRunningSum]] over a slim (part, order, value)
+    * projection whose order column is `struct(orderCols ++ every other
+    * column)`: the whole row rides inside the rank struct, so the
+    * result is unpacked from it with no join back to `df`. `orderCols`
+    * must be a UNIQUE composite (append a key column as tiebreak,
+    * exactly as a deterministic row_number window would); the trailing
+    * fields then never decide an order. Null order keys rank first,
+    * like the window form. Every column of `df` must be orderable — one
+    * that is not (a map, say) fails at call time, named. */
+  def distributedRank(df: DataFrame, orderCols: Seq[String],
+      outCol: String): DataFrame = {
+    require(orderCols.nonEmpty, "distributedRank needs at least one order column")
+    val reserved = Seq("__np", "__nk", "__nv")
+    require(!df.columns.exists(reserved.contains) && !df.columns.contains(outCol),
+      s"distributedRank reserves ${reserved.mkString(", ")} and output '$outCol'")
+    df.schema.fields
+      .find(f => !org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(f.dataType))
+      .foreach(f => throw new IllegalArgumentException(
+        s"distributedRank cannot order column '${f.name}' of type ${f.dataType.simpleString}"))
+    val carried = df.columns.filterNot(orderCols.contains)
+    val lite = df.select(lit(0).as("__np"),
+      struct((orderCols ++ carried).map(col): _*).as("__nk"), lit(1L).as("__nv"))
+    distributedRunningSum(lite, "__np", "__nk", "__nv", outCol)
+      .select(df.columns.toSeq.map(c => col("__nk").getField(c).as(c)) :+ col(outCol): _*)
+  }
+
+  /** The SQL-ntile bucket of 1-based position `rank` among `n` rows in
+    * `k` buckets: buckets 1..n%k hold n/k + 1 rows, the rest n/k — the
+    * `ntile(k)` rule, row for row. The coalesce makes the bucket
+    * NON-NULLABLE (integral division is nullable in the type system
+    * though never null here): a downstream inner join on the bucket
+    * would otherwise infer isnotnull(bucket) and push it INTO the
+    * broadcast count join, degrading it to a conditioned BNLJ (the
+    * PlanSpec guard caught analytics_pareto_curve doing exactly this);
+    * -1 is unreachable. */
+  private[graft] def ntileBucket(rank: Column, n: Column, k: Int): Column = {
+    def div(a: Column, b: Column): Column = call_function("div", a, b)
+    val q = div(n, lit(k))
+    val r = n % k
+    coalesce(
+      when(rank <= (q + 1) * r, div(rank - 1, q + 1) + 1)
+        .otherwise(r + div(rank - (q + 1) * r - 1, q) + 1)
+        .cast("int"),
+      lit(-1))
+  }
+
+  /** PUBLIC API: distributed ntile — `ntile(k).over(orderBy(orderCols))`
+    * as [[distributedRank]] plus [[ntileBucket]] on the position, at
+    * shard-count parallelism. */
+  def distributedNtile(df: DataFrame, orderCols: Seq[String], k: Int,
+      outCol: String): DataFrame = {
+    require(k >= 1, s"distributedNtile needs k >= 1, got $k")
+    require(!df.columns.exists(Seq("__nrank", "__nn").contains),
+      "distributedNtile reserves __nrank, __nn")
+    distributedRank(df, orderCols, "__nrank")
+      .crossJoin(broadcast(df.agg(count(lit(1)).as("__nn"))))
+      .withColumn(outCol, ntileBucket(col("__nrank"), col("__nn"), k))
+      .drop("__nrank", "__nn")
+  }
+
+  /** PUBLIC API: per-group distributed ntile —
+    * `ntile(k).over(partitionBy(byCol).orderBy(orderCols))` at shard-count
+    * parallelism. One [[distributedRunningSum]] pass ranks ALL groups over
+    * the shared (byCol, orderCols) spine, so N independent ntiles (tag
+    * each metric, union, call once) cost one range exchange and one
+    * window pass (with its hash exchange) instead of N of each
+    * (analytics_rfm_segments ranks its three quartiles this way). Group
+    * sizes come from one
+    * map-side-combined count over `df` (broadcast, null-safe on the group
+    * key — null keys bucket together exactly like the window form).
+    * CARDINALITY CONTRACT: the size table is one row per distinct `byCol`
+    * value and is UNCONDITIONALLY broadcast — use this kernel only when
+    * |groups| is broadcast-sized (segments, flags, dimension keys: the
+    * in-repo callers have 2–3). Many small groups are what a plain
+    * per-key window is for; this kernel exists for few huge groups.
+    * `df` must be exactly (byCol ++ orderCols) and orderCols must be
+    * unique per group, the [[distributedRank]] contract. */
+  def distributedNtileBy(df: DataFrame, byCol: String, orderCols: Seq[String],
+      k: Int, outCol: String): DataFrame = {
+    require(k >= 1, s"distributedNtileBy needs k >= 1, got $k")
+    val reserved = Seq("__np", "__nk", "__nv", "__nn", "__nrank", "__nbk")
+    require(!df.columns.exists(reserved.contains) && !df.columns.contains(outCol),
+      s"distributedNtileBy reserves ${reserved.mkString(", ")} and output '$outCol'")
+    require(df.columns.toSet == (orderCols :+ byCol).toSet,
+      s"distributedNtileBy needs df == (byCol ++ orderCols); got ${df.columns.mkString(",")}")
+    val lite = df.select(col(byCol).as("__np"),
+      struct(orderCols.map(col): _*).as("__nk"), lit(1L).as("__nv"))
+    val ranked = distributedRunningSum(lite, "__np", "__nk", "__nv", "__nrank")
+    val sizes = df.groupBy(col(byCol).as("__nbk"))
+      .agg(count(lit(1)).as("__nn"))
+    ranked.join(broadcast(sizes), col("__np") <=> col("__nbk"))
+      .withColumn(outCol, ntileBucket(col("__nrank"), col("__nn"), k))
+      .select(col("__np").as(byCol) +:
+        orderCols.map(c => col("__nk").getField(c).as(c)) :+ col(outCol): _*)
   }
 
   val queries: Map[String, Q] = Map(

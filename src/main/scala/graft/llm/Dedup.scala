@@ -462,8 +462,11 @@ object Dedup {
         val byLab = fused.select(col("node").as("ln"), col("lab").as("lab2"))
         // r15: LAZY local checkpoint + a count aggregate as the
         // materializing action — the convergence scalar rides the SAME
-        // job that persists the round's blocks, so each round is ONE job
-        // instead of two (checkpoint job + isEmpty scan). Reliable
+        // action that persists the round's blocks, so each round is one
+        // action instead of two (checkpoint + isEmpty scan). Under AQE
+        // that action still books 2–4 jobs (one per shuffle stage AQE
+        // submits on its own: a warm 500-doc dedup batch's round 1 booked
+        // 4 jobs, its confirm round 2). Reliable
         // checkpoints (checkpointDir set) stay EAGER: a lazily-checkpointed
         // reliable RDD is recomputed once more when the checkpoint files
         // are written, which would cost a round, not save one.

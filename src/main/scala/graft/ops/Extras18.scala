@@ -34,7 +34,7 @@ object Extras18 {
     // DIRECTIONAL, unlike co-occurrence, and non-adjacent, unlike the
     // transition matrix. min/max occurrence positions per (session,
     // type) make the precedence test one struct comparison.
-    // Session ids ride the DISTRIBUTED sessionize kernel (range-sharded
+    // Session ids ride the range-split sessionize kernel (range-sharded
     // lag + cumsum with a ≤(shards−1)-row boundary broadcast) — the
     // former single-task double window over each user's whole run was
     // the suite's one skew scale-killer (SKEW_PROBE 4.35× under a ~10%
@@ -44,8 +44,7 @@ object Extras18 {
       val e = Tables(s, dir, "events").select(
         col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-      val sess = graft.llm.Chunking.distributedSessionize(
-        e, "user_id", "us", Seq("event_id"), gapUs, "sid")
+      val sess = GraftOps.sessionize(e, "user_id", "us", Seq("event_id"), gapUs, "sid")
       val st = sess.groupBy("user_id", "sid", "event_type")
         .agg(min(struct(col("us"), col("event_id"))).as("first_pos"),
           max(struct(col("us"), col("event_id"))).as("last_pos"))

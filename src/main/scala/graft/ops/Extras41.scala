@@ -184,7 +184,7 @@ object Extras41 {
       val li = Tables(s, dir, "lineitem").select(
         col("l_extendedprice").as("x"),
         when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-      val ranked = Extras7.distributedRank(li.select("x"), Seq("x"), "rn")
+      val ranked = GraftOps.distributedRank(li.select("x"), Seq("x"), "rn")
       val np = li.agg(count(lit(1)).as("n"), sum("y").as("p"))
       val qs = (1 to 9).toSeq
       // decile positions in pure integer arithmetic: ((n−1)·i) DIV 10 + 1

@@ -25,133 +25,6 @@ object Extras7 {
   // join_lateral_topn concurrency discipline)
   private val ppsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** PUBLIC API: distributed global rank — `row_number().over(
-    * orderBy(orderCols))` without the single-partition window a global
-    * ORDER plans (THE scale-killer PlanSpec rejects). Positions come
-    * from the two-level distributed prefix sum ([[graft.llm.Chunking
-    * .distributedRunningSum]]: range-shard split, per-shard window,
-    * broadcast shard offsets); parallelism is the shard count, never
-    * one task. `orderCols` must be a UNIQUE composite (append a key
-    * column as tiebreak, exactly as a deterministic row_number window
-    * would). If the input violates that contract with duplicate FULL
-    * rows, the two code paths below diverge: the projection shortcut
-    * (all columns inside the rank struct) emits m rows with m distinct
-    * ranks — the row_number-faithful behavior — while the join-back
-    * path would cross-match them into m² rows. Don't rely on the old
-    * join-back multiplication; the projection semantics are the
-    * contract going forward. */
-  def distributedRank(df: org.apache.spark.sql.DataFrame, orderCols: Seq[String],
-      outCol: String): org.apache.spark.sql.DataFrame = {
-    require(orderCols.nonEmpty, "distributedRank needs at least one order column")
-    val reserved = Seq("__np", "__nk", "__nv", "__nn", "__nq", "__nr")
-    require(!df.columns.exists(reserved.contains) && !df.columns.contains(outCol),
-      s"distributedRank reserves ${reserved.mkString(", ")} and output '$outCol'")
-    // pre-projected to exactly (part, order, value): the kernel's
-    // single-exchange structural-reuse contract (Chunking.scala)
-    val lite = df.select(lit(0).as("__np"),
-      struct(orderCols.map(col): _*).as("__nk"), lit(1L).as("__nv"))
-    val ranked = graft.llm.Chunking
-      .distributedRunningSum(lite, "__np", "__nk", "__nv", outCol)
-    if (df.columns.toSet == orderCols.toSet) {
-      // JOIN-BACK ELIMINATION: every output column already rides inside
-      // the rank struct, so re-matching the fact rows would re-attach
-      // nothing — unpacking the struct saves a full fact-fact
-      // sort-merge join (the round-12 10x probe read exponent 1.21 on
-      // encode_quantile_binning through the join-back path; 60M-row
-      // rank = 3 extra fact-sized sorts). No row can drop from a
-      // projection, so the <=> null-key guarantee holds trivially.
-      ranked.select(df.columns.toSeq.map(c =>
-        col("__nk").getField(c).as(c)) :+ col(outCol): _*)
-    } else
-      // null-safe equality: a null in any order column makes plain struct
-      // equality NULL and would silently drop the row from the output —
-      // <=> keeps null keys (the window form ranks them too)
-      df.join(ranked.select(col("__nk"), col(outCol)),
-        struct(orderCols.map(col): _*) <=> col("__nk")).drop("__nk")
-  }
-
-  /** PUBLIC API: distributed ntile — `ntile(k).over(orderBy(orderCols))`
-    * via [[distributedRank]] plus the SQL-ntile bucket rule (first
-    * n mod k buckets one row larger) applied arithmetically to the
-    * position — positional semantics identical to SQL ntile, row for
-    * row, at shard-count parallelism. */
-  def distributedNtile(df: org.apache.spark.sql.DataFrame, orderCols: Seq[String],
-      k: Int, outCol: String): org.apache.spark.sql.DataFrame = {
-    require(k >= 1, s"distributedNtile needs k >= 1, got $k")
-    require(!df.columns.contains("__nrank"), "distributedNtile reserves __nrank")
-    distributedRank(df, orderCols, "__nrank")
-      .crossJoin(broadcast(df.agg(count(lit(1)).as("__nn"))))
-      .withColumn("__nq", expr(s"__nn DIV $k"))
-      .withColumn("__nr", expr(s"__nn % $k"))
-      // SQL ntile: buckets 1..r have q+1 rows, buckets r+1..k have q rows.
-      // coalesce makes the output NON-NULLABLE (DIV is nullable in the
-      // type system though never null here): a downstream inner join on
-      // the bucket would otherwise infer isnotnull(bucket) and push it
-      // INTO the broadcast count join, degrading it to a conditioned
-      // BNLJ (the full-suite PlanSpec guard caught analytics_pareto_curve
-      // doing exactly this); -1 is unreachable.
-      .withColumn(outCol,
-        coalesce(
-          when(col("__nrank") <= (col("__nq") + 1) * col("__nr"),
-            expr("(__nrank - 1) DIV (__nq + 1) + 1"))
-            .otherwise(expr("__nr + (__nrank - (__nq + 1) * __nr - 1) DIV __nq + 1"))
-            .cast("int"),
-          lit(-1)))
-      .drop("__nrank", "__nn", "__nq", "__nr")
-  }
-
-  /** PUBLIC API: per-group distributed ntile —
-    * `ntile(k).over(partitionBy(byCol).orderBy(orderCols))` at shard-count
-    * parallelism. One [[graft.llm.Chunking.distributedRunningSum]] pass
-    * ranks ALL groups over the shared (byCol, orderCols) spine, so N
-    * independent ntiles (tag each metric, union, call once) cost ONE
-    * range exchange + ONE window pass instead of N of each — the r14
-    * rework that collapsed analytics_rfm_segments' three kernel passes
-    * and analytics_customer_migration's two into one apiece (guide
-    * §2.4: two operations keyed the same way share one exchange).
-    * Group sizes come from one map-side-combined count over `df`
-    * (broadcast, null-safe on the group key — null keys bucket together
-    * exactly like the window form). CARDINALITY CONTRACT: the size table
-    * is one row per distinct `byCol` value and is UNCONDITIONALLY
-    * broadcast — use this kernel only when |groups| is broadcast-sized
-    * (segments, flags, dimension keys: the in-repo callers have 2–3).
-    * A high-cardinality byCol (millions of groups) would push the group
-    * census through the driver and every executor; such shapes should
-    * rank per group with a plain per-key window instead (many small
-    * groups are exactly what single-task window partitions are FOR —
-    * this kernel exists for the opposite regime, few huge groups).
-    * `df` must be exactly (byCol ++ orderCols) and orderCols must be
-    * unique per group, the [[distributedRank]] contract. */
-  def distributedNtileBy(df: org.apache.spark.sql.DataFrame, byCol: String,
-      orderCols: Seq[String], k: Int, outCol: String): org.apache.spark.sql.DataFrame = {
-    require(k >= 1, s"distributedNtileBy needs k >= 1, got $k")
-    val reserved = Seq("__np", "__nk", "__nv", "__nn", "__nq", "__nr", "__nrank", "__nbk")
-    require(!df.columns.exists(reserved.contains) && !df.columns.contains(outCol),
-      s"distributedNtileBy reserves ${reserved.mkString(", ")} and output '$outCol'")
-    require(df.columns.toSet == (orderCols :+ byCol).toSet,
-      s"distributedNtileBy needs df == (byCol ++ orderCols); got ${df.columns.mkString(",")}")
-    val lite = df.select(col(byCol).as("__np"),
-      struct(orderCols.map(col): _*).as("__nk"), lit(1L).as("__nv"))
-    val ranked = graft.llm.Chunking
-      .distributedRunningSum(lite, "__np", "__nk", "__nv", "__nrank")
-    val sizes = df.groupBy(col(byCol).as("__nbk"))
-      .agg(count(lit(1)).as("__nn"))
-    ranked.join(broadcast(sizes), col("__np") <=> col("__nbk"))
-      .withColumn("__nq", expr(s"__nn DIV $k"))
-      .withColumn("__nr", expr(s"__nn % $k"))
-      // SQL ntile bucket rule + the non-nullability coalesce — see
-      // [[distributedNtile]]'s comment; -1 is unreachable.
-      .withColumn(outCol,
-        coalesce(
-          when(col("__nrank") <= (col("__nq") + 1) * col("__nr"),
-            expr("(__nrank - 1) DIV (__nq + 1) + 1"))
-            .otherwise(expr("__nr + (__nrank - (__nq + 1) * __nr - 1) DIV __nq + 1"))
-            .cast("int"),
-          lit(-1)))
-      .select(col("__np").as(byCol) +:
-        orderCols.map(c => col("__nk").getField(c).as(c)) :+ col(outCol): _*)
-  }
-
   /** PUBLIC API: truncated exponentially-weighted moving average with
     * exact decimal arithmetic. λ = 1/2, horizon = 8 lags: weights
     * 2⁻¹ … 2⁻⁸ are exact decimal literals, each term is an exact
@@ -270,7 +143,7 @@ object Extras7 {
     // RFM segmentation: per customer recency/frequency/monetary, quartile
     // each (deterministic total order: metric then custkey), segment code
     // r·100 + f·10 + m, report segment occupancy. The per-customer rollup
-    // is the only fact pass; each quartile is a [[distributedNtile]] —
+    // is the only fact pass; each quartile is a [[GraftOps.distributedNtile]] —
     // positional SQL-ntile semantics WITHOUT the single-partition global
     // window (ranks come from the two-level prefix sum, parallelism =
     // shard count at any customer cardinality).
@@ -289,7 +162,7 @@ object Extras7 {
       // window passes + 3 join-backs on o_custkey). All three rank over
       // the same row set, so TAG each metric (monetary as exact cents —
       // m_dec has scale 4, ×10⁴ is a monotone exact long, identical
-      // order and ties) and rank the union in ONE [[distributedNtileBy]]
+      // order and ties) and rank the union in ONE [[GraftOps.distributedNtileBy]]
       // pass; the per-customer (r_q, f_q, m_q) triple then reassembles
       // in one groupBy instead of three joins. Bucket rule, ordering and
       // tiebreaks are unchanged — output is identical row for row.
@@ -297,7 +170,7 @@ object Extras7 {
         .unionAll(rfm.select(lit(2).as("tag"), col("f_cnt").as("metric"), col("o_custkey")))
         .unionAll(rfm.select(lit(3).as("tag"),
           (col("m_dec") * 10000).cast("long").as("metric"), col("o_custkey")))
-      distributedNtileBy(tagged, "tag", Seq("metric", "o_custkey"), 4, "q")
+      GraftOps.distributedNtileBy(tagged, "tag", Seq("metric", "o_custkey"), 4, "q")
         .groupBy("o_custkey")
         .agg(max(when(col("tag") === 1, col("q"))).as("r_q"),
           max(when(col("tag") === 2, col("q"))).as("f_q"),
@@ -321,17 +194,10 @@ object Extras7 {
       val cust = Tables(s, dir, "customer").select("c_custkey", "c_acctbal")
       // ONE rank pass; ntile derives arithmetically from (rn, n) — a
       // second kernel pass would re-rank the identical order for nothing
-      distributedRank(cust, Seq("c_acctbal", "c_custkey"), "rn")
+      GraftOps.distributedRank(cust, Seq("c_acctbal", "c_custkey"), "rn")
         .crossJoin(broadcast(cust.agg(count(lit(1)).as("n"))))
-        .withColumn("__q", expr("n DIV 4"))
-        .withColumn("__r", expr("n % 4"))
         .select(col("c_custkey"), col("c_acctbal"),
-          coalesce(
-            when(col("rn") <= (col("__q") + 1) * col("__r"),
-              expr("(rn - 1) DIV (__q + 1) + 1"))
-              .otherwise(expr("__r + (rn - (__q + 1) * __r - 1) DIV __q + 1"))
-              .cast("int"),
-            lit(-1)).as("quartile"),
+          graft.llm.Chunking.ntileBucket(col("rn"), col("n"), 4).as("quartile"),
           ((col("rn") - 1).cast(DoubleType) / (col("n") - 1).cast(DoubleType))
             .as("pr"),
           (col("rn").cast(DoubleType) / col("n").cast(DoubleType)).as("cd"))
@@ -365,7 +231,7 @@ object Extras7 {
       // same exact integer arithmetic, two fewer full kernel passes.
       // byDecile feeds the cum rollup AND the final join: checkpoint it
       // (10 rows).
-      val byDecile = distributedNtile(custRev, Seq("negrev", "o_custkey"), 10, "decile")
+      val byDecile = GraftOps.distributedNtile(custRev, Seq("negrev", "o_custkey"), 10, "decile")
         .groupBy("decile")
         .agg(count(lit(1)).as("n_customers"), sum("rev_c").as("rev_cents"))
         .localCheckpoint(false)

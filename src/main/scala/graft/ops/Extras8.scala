@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * the chi²/ANOVA/KS family), and the decile Lorenz curve next to
   * [[Stats]]' Gini.
   *
-  * Scale discipline: sessionization's windows are all PARTITIONED BY
-  * user (bounded state, never a global window); both hypothesis tests
+  * Scale discipline: sessionization rides the range-split sessionize
+  * kernel (no per-user window holds a hot user's whole run); both hypothesis tests
   * reduce map-side to one sufficient-statistics row per side (t-test)
   * or per distinct value (U test, whose midranks come from the
   * exclusive distributed prefix sum); the Lorenz curve is dimension-
@@ -39,17 +39,11 @@ object Extras8 {
   val queries: Map[String, Q] = Map(
 
     // gap-based sessionization: per-user 12 h rule, one row per session.
+    // Session ids come from the range-split GraftOps.sessionize kernel.
     "events_sessionize" -> { (s, dir) =>
       val e = Tables(s, dir, "events").select(
         col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
-      val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-      // windows can't nest — materialize the new-session flag, then sum
-      val flagged = e.withColumn("ns",
-        when(lag(col("us"), 1).over(w).isNull ||
-          col("us") - lag(col("us"), 1).over(w) > gapUs, 1L).otherwise(0L))
-      flagged
-        .withColumn("sid", sum(col("ns")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      GraftOps.sessionize(e, "user_id", "us", Seq("event_id"), gapUs, "sid")
         .groupBy("user_id", "sid")
         .agg(count(lit(1)).as("n_events"),
           min(col("us")).as("start_us"), max(col("us")).as("end_us"))

@@ -86,16 +86,8 @@ object Windows {
       val c = Tables(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
       GraftOps.distributedRank(c, Seq("c_acctbal", "c_custkey"), "__rn")
         .crossJoin(broadcast(c.agg(count(lit(1)).as("__n"))))
-        .withColumn("__q", expr("__n DIV 4"))
-        .withColumn("__r", expr("__n % 4"))
         .select(col("c_custkey"), col("c_acctbal"),
-          // coalesce keeps the bucket non-nullable (see distributedNtile)
-          coalesce(
-            when(col("__rn") <= (col("__q") + 1) * col("__r"),
-              expr("(__rn - 1) DIV (__q + 1) + 1"))
-              .otherwise(expr("__r + (__rn - (__q + 1) * __r - 1) DIV __q + 1"))
-              .cast("int"),
-            lit(-1)).as("quartile"),
+          graft.llm.Chunking.ntileBucket(col("__rn"), col("__n"), 4).as("quartile"),
           when(col("__n") > 1, (col("__rn") - 1).cast("double") /
             (col("__n") - 1).cast("double")).otherwise(0.0).as("pr"),
           (col("__rn").cast("double") / col("__n").cast("double")).as("cd"))

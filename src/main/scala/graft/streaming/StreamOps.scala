@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** §2.13 Structured Streaming forms of the declared stream queries.
@@ -113,26 +112,6 @@ object StreamOps {
     graft.llm.LineDedup.blockized(docs, "text", blockWords)
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("btext")
-
-  /** BATCH sessionization: add a per-key `session_id` (1-based, in time
-    * order) closing sessions after `gapSeconds` of inactivity — the
-    * gaps-and-islands form of [[sessions]] parameterized over caller
-    * DataFrames (use [[sessions]] for the streaming path). One shuffle on
-    * the key; `orderCols` break timestamp ties deterministically. */
-  def sessionize(df: DataFrame, keyCol: String, tsCol: String,
-      gapSeconds: Long, orderCols: Seq[String] = Nil): DataFrame = {
-    require(!df.columns.exists(Seq("__t", "__new", "session_id").contains),
-      "sessionize reserves the column names __t, __new, session_id")
-    val ord: Seq[Column] = col("__t") +: orderCols.map(col)
-    val w = Window.partitionBy(col(keyCol)).orderBy(ord: _*)
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__t", unix_micros(col(tsCol)))
-      .withColumn("__new",
-        when(col("__t") - lag(col("__t"), 1).over(w) > gapSeconds * 1000000L, 1L)
-          .when(lag(col("__t"), 1).over(w).isNull, 1L).otherwise(0L))
-      .withColumn("session_id", sum(col("__new")).over(wRun))
-      .drop("__t", "__new")
-  }
 
   /** Stream-stream interval join: each purchase matched to the same user's
     * views in the preceding 10 minutes. Both sides carry a watermark and

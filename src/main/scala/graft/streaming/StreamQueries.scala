@@ -32,13 +32,13 @@ object StreamQueries {
         .orderBy(col("ws"), col("event_type"))
     },
 
-    // per-user sessions, 30 min gap — the StreamOps.sessionize API
-    // (gaps-and-islands in event time), aggregated per session
+    // per-user sessions, 30 min gap — the batch GraftOps.sessionize
+    // kernel (gaps-and-islands in event time), aggregated per session
     "stream_session_window" -> { (s, dir) =>
-      StreamOps.sessionize(
-        Tables(s, dir, "events").select(col("event_id"), col("user_id"), col("ts")),
-        "user_id", "ts", gapSeconds = 1800, orderCols = Seq("event_id"))
-        .withColumn("t", unix_micros(col("ts")))
+      val e = Tables(s, dir, "events").select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("t"))
+      GraftOps.sessionize(e, "user_id", "t", Seq("event_id"), 1800L * 1000000L,
+          "session_id")
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_events"),
           min(col("t")).as("start_us"), max(col("t")).as("end_us"))

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The round-14 distributed-lag kernels (llm.Chunking.distributedLag /
-  * distributedSessionize): exact parity with the single-window forms at
+/** The distributed-lag kernels (llm.Chunking.distributedLag /
+  * sessionize): exact parity with the single-window forms at
   * any shard count, including shard-spanning groups, null group keys,
-  * null lagged values, and the hot-key shape the kernel exists for. */
+  * null lagged values and timestamps, and the hot-key shape the kernel exists for. */
 class DistributedLagSpec extends SparkSuite {
   import TestSpark.spark.implicits._
 
@@ -68,26 +68,56 @@ class DistributedLagSpec extends SparkSuite {
     }
   }
 
-  test("distributedSessionize == single-window session ids at any shard count") {
-    val rows = events(300)
-    val df = rows.toDF("u", "ts", "id")
+  // the single-window reference: a row opens a session when it has no
+  // predecessor, its predecessor's ts is null, or the gap exceeds `gap`
+  private def windowSessions(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
     val w = Window.partitionBy("u").orderBy("ts", "id")
-    val want = df
-      .withColumn("ns",
+    df.withColumn("ns",
         when(lag(col("ts"), 1).over(w).isNull ||
           col("ts") - lag(col("ts"), 1).over(w) > gap, 1L).otherwise(0L))
       .withColumn("sid", sum(col("ns")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select("id", "sid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (shards <- Seq(1, 5, 64)) {
-      val got = GraftOps.distributedSessionize(df, "u", "ts", Seq("id"), gap,
-          "sid", shards = shards)
-        .select("id", "sid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, s"session ids diverged at shards=$shards")
+  }
+
+  private def kernelSessions(df: org.apache.spark.sql.DataFrame,
+      shards: Int): Map[Long, Long] =
+    GraftOps.sessionize(df, "u", "ts", Seq("id"), gap, "sid", shards = shards)
+      .select("id", "sid").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("sessionize == single-window session ids at any shard count") {
+    // 4000 rows over 4 input partitions (see the distributedLag test):
+    // the hot user spans shards, so boundary corrections carry offsets.
+    val base = events(4000).toDF("u", "ts", "id").repartition(4)
+    val want = windowSessions(base)
+    forEachShardSplit(base) { (split, df) =>
+      for (shards <- Seq(1, 5, 64))
+        assert(kernelSessions(df, shards) == want,
+          s"session ids diverged at shards=$shards split=$split")
     }
   }
 
-  test("distributedSessionize carries extra columns and keeps null keys one group") {
+  test("sessionize: null timestamps open sessions as in the single-window form") {
+    // the hot user's first 40 rows have a null ts. Nulls sort first, so
+    // each opens its own session, the first non-null row after them opens
+    // another, and a shard whose previous tail ts is null must still add
+    // the earlier shards' session totals (200 shards put a cut inside
+    // the 40 null rows; 64 keep them in the first shard).
+    val hotIds = events(4000).filter(_._1 == "hot").map(_._3).take(40).toSet
+    val base = events(4000)
+      .map { case (u, ts, id) => (u, if (hotIds(id)) None else Some(ts), id) }
+      .toDF("u", "ts", "id").repartition(4)
+    val want = windowSessions(base)
+    for (shards <- Seq(1, 5, 64, 200)) {
+      val got = kernelSessions(base, shards)
+      val wrong = want.count { case (id, sid) => !got.get(id).contains(sid) } +
+        (got.size - want.size).abs
+      assert(wrong == 0,
+        s"$wrong of ${want.size} session ids diverged with null timestamps at shards=$shards")
+    }
+  }
+
+  test("sessionize carries extra columns and keeps null keys one group") {
     val df = Seq(
       (Option.empty[String], 0L, 1L, "view"),
       (Option.empty[String], 50L, 2L, "cart"),   // gap 50 ≤ 100 ⇒ same session
@@ -95,7 +125,7 @@ class DistributedLagSpec extends SparkSuite {
       (Option("a"), 0L, 4L, "view"))
       .toDF("u", "ts", "id", "etype")
     for (shards <- Seq(1, 3)) {
-      val got = GraftOps.distributedSessionize(df, "u", "ts", Seq("id"), gap,
+      val got = GraftOps.sessionize(df, "u", "ts", Seq("id"), gap,
           "sid", shards = shards)
         .select("id", "sid", "etype").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
@@ -110,11 +140,11 @@ class DistributedLagSpec extends SparkSuite {
       GraftOps.distributedLag(bad, "u", Seq("__shard"), "v", "out")
     }
     intercept[IllegalArgumentException] {
-      GraftOps.distributedSessionize(bad, "u", "__shard", Nil, gap, "sid")
+      GraftOps.sessionize(bad, "u", "__shard", Nil, gap, "sid")
     }
     val collide = Seq(("a", 1L, 2L)).toDF("u", "ts", "sid")
     intercept[IllegalArgumentException] {
-      GraftOps.distributedSessionize(collide, "u", "ts", Nil, gap, "sid")
+      GraftOps.sessionize(collide, "u", "ts", Nil, gap, "sid")
     }
   }
 }

@@ -267,10 +267,11 @@ class GraftOpsSpec extends SparkSuite {
       (1L, java.sql.Timestamp.valueOf("2024-01-01 00:10:00")),
       (1L, java.sql.Timestamp.valueOf("2024-01-01 01:00:00")), // >30 min gap
       (2L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
-    ).toDF("user", "ts")
-    val out = GraftOps.sessionize(df, "user", "ts", gapSeconds = 1800)
-      .orderBy("user", "ts").collect()
-      .map(r => (r.getLong(0), r.getLong(2))).toSeq
+    ).toDF("user", "ts").select(col("user"), unix_micros(col("ts")).as("us"))
+    val out = GraftOps.sessionize(df, "user", "us", Nil, 1800L * 1000000L,
+        "session_id")
+      .orderBy("user", "us").select("user", "session_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(out == Seq((1L, 1L), (1L, 1L), (1L, 2L), (2L, 1L)))
   }
 

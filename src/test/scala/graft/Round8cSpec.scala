@@ -166,30 +166,48 @@ class Round8cSpec extends SparkSuite {
     assert(direct == commuted)
   }
 
-  test("distributedRank keeps rows with NULL order keys (null-safe join-back)") {
-    // `payload` is NOT an order column, so this df takes the JOIN-BACK
-    // path (round 12 added a projection shortcut when columns == order
-    // cols — without the extra column this test would silently stop
-    // covering the <=> null-safe join it is named for, review-caught)
+  test("distributedRank keeps rows with NULL order keys and carries payload columns") {
     val df = Seq[(java.lang.Long, String, String)](
       (null, "a", "pa"), (3L, "b", "pb"), (1L, "c", "pc"),
       (null, "d", "pd"), (2L, "e", "pe"))
       .toDF("x", "id", "payload")
     val ranked = GraftOps.distributedRank(df, Seq("x", "id"), "r")
     assert(ranked.count() == 5, "null order keys must not drop rows")
-    assert(ranked.columns.contains("payload"), "join-back lost the payload col")
+    assert(ranked.columns.toSeq == Seq("x", "id", "payload", "r"),
+      s"columns: ${ranked.columns.mkString(",")}")
     val ranks = ranked.select("r").collect().map(_.getLong(0)).sorted
     assert(ranks.sameElements(Array(1L, 2L, 3L, 4L, 5L)), "ranks not a permutation")
     // nulls-first like the window form
     val nullRanks = ranked.where(col("x").isNull)
       .select("r").collect().map(_.getLong(0)).toSet
     assert(nullRanks == Set(1L, 2L), s"null keys should rank first: $nullRanks")
-    // the projection shortcut must agree with the join-back row-for-row
-    val viaProjection = GraftOps.distributedRank(
-      df.select("x", "id"), Seq("x", "id"), "r")
-    val a = ranked.select("x", "id", "r").collect().map(_.toSeq).toSet
-    val b = viaProjection.select("x", "id", "r").collect().map(_.toSeq).toSet
-    assert(a == b, "projection path disagrees with join-back path")
+    // each payload stays on its own row
+    val byId = ranked.select("id", "payload", "r").collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(byId == Map("a" -> ("pa", 1L), "d" -> ("pd", 2L), "c" -> ("pc", 3L),
+      "e" -> ("pe", 4L), "b" -> ("pb", 5L)), s"rows: $byId")
+  }
+
+  test("distributedRank returns m rows with m distinct ranks for duplicate full rows") {
+    // (1, a, p) twice breaks the unique-order contract; row_number still
+    // numbers each copy once, and so must the kernel (a join back to the
+    // input would cross-match the copies into 2 × 2 rows)
+    val df = Seq((1L, "a", "p"), (1L, "a", "p"), (2L, "b", "q"))
+      .toDF("x", "id", "payload")
+    val ranked = GraftOps.distributedRank(df, Seq("x", "id"), "r")
+      .select("x", "id", "payload", "r").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+    assert(ranked.length == 3, s"expected 3 rows, got ${ranked.toSeq}")
+    assert(ranked.map(_._4).toSet == Set(1L, 2L, 3L), s"ranks: ${ranked.toSeq}")
+    assert(ranked.find(_._4 == 3L).map(_._3).contains("q"), s"rows: ${ranked.toSeq}")
+  }
+
+  test("distributedRank rejects a column it cannot order, naming it") {
+    val df = Seq((1L, Map("k" -> 1))).toDF("x", "tags")
+    val e = intercept[IllegalArgumentException] {
+      GraftOps.distributedRank(df, Seq("x"), "r")
+    }
+    assert(e.getMessage.contains("'tags'"), e.getMessage)
   }
 
   test("overlapSelfJoin equals the theta join, pairs exactly once") {
