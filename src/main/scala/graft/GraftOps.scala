@@ -28,10 +28,8 @@ object GraftOps {
   def shingleSet(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
     llm.Dedup.shingleSet(df, idCol, textCol, n)
 
-  /** MinHash-LSH candidate pairs (doc_a, doc_b, n_bands) over a shingle set. */
-  def minhashCandidates(sh: DataFrame): DataFrame = llm.Dedup.candidatesFrom(sh)
-
-  /** one-call near-dup candidates for a (id, text) corpus. */
+  /** one-call near-dup candidates for a (id, text) corpus: MinHash-LSH
+    * pairs (doc_a, doc_b, n_bands). */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
     llm.Dedup.candidatesFromArrays(llm.Dedup.shingleArrays(df, idCol, textCol, n))
 
@@ -42,7 +40,7 @@ object GraftOps {
   def jaccardDuplicates(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3): DataFrame = {
     val da = llm.Dedup.shingleArrays(df, idCol, textCol, n, dedup = true)
-    llm.Dedup.verifyCandidates(da, llm.Dedup.candidatesFromArrays(da),
+    llm.Dedup.verifyCandidates(da, da, llm.Dedup.candidatesFromArrays(da),
       "jaccard", threshold, llm.Dedup.jaccardScore)
   }
 
@@ -66,7 +64,7 @@ object GraftOps {
     llm.LineDedup.lineDedup(docs, blockWords)
 
   /** reclaim every relation the dedup stack persisted for `session` (the
-    * memoized shingle arrays and band-sig/simhash caches) — call between
+    * memoized and dedupCorpus shingle arrays) — call between
     * corpora in a long-lived session; returns how many were unpersisted. */
   def clearDedupCaches(session: org.apache.spark.sql.SparkSession): Int =
     llm.Dedup.clearCaches(session)

@@ -55,7 +55,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // release the dedup stack's persisted relations before shutdown — the
-    // 142-query sweep otherwise holds its shared shingle/band-sig caches
+    // 142-query sweep otherwise holds its shared shingle-array caches
     // for the rest of the JVM's life
     try GraftOps.clearDedupCaches(spark) catch { case e: Throwable =>
       System.err.println(s"[verify] cache clear failed: ${e.getMessage}")

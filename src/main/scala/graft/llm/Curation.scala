@@ -17,7 +17,8 @@ import org.apache.spark.sql.expressions.Window
   *    is proportional to the BATCH, not the corpus — the whole point of
   *    incremental ingestion. Candidate generation is a batch-sigs ⋈
   *    corpus-sigs equi-join on (band, sig); exact n-gram Jaccard verifies
-  *    only those candidates (same verify shape as [[Dedup.verifyCandidates]]).
+  *    only those candidates. Both steps are the dedup stack's own
+  *    ([[Dedup.bandJoin]], [[Dedup.verifyCandidates]]).
   *  - `text_decontaminate`: benchmark decontamination — flag corpus
   *    documents sharing ≥1 8-gram with an evaluation set (the standard
   *    guard against test-set leakage into training data). The eval set is
@@ -72,23 +73,10 @@ object Curation {
     * cached corpus arrays this way. */
   def incrementalRejects(ca: DataFrame, ba: DataFrame,
       threshold: Double): DataFrame = {
-    val cand = Dedup.bandSigsFromArrays(ba)
-      .select(col("doc_id").as("b_id"), col("band"), col("sig"))
-      .join(Dedup.bandSigsFromArrays(ca)
-        .select(col("doc_id").as("c_id"), col("band"), col("sig")),
-        Seq("band", "sig"))
-      .select(col("b_id"), col("c_id")).distinct()
-    // exact verify over candidates only; joins stay UNHINTED — AQE
-    // broadcasts the LSH-small candidate side at bench scale, and at an
-    // adversarial corpus size the same plan degrades to shuffle joins on
-    // the id (same policy as Dedup.verifyCandidates)
-    val withB = ba.select(col("doc_id").as("b_id"), col("sh").as("shb"))
-    val withC = ca.select(col("doc_id").as("c_id"), col("sh").as("shc"))
-    withC.join(withB.join(cand, "b_id"), "c_id")
-      .withColumn("common", size(array_intersect(col("shb"), col("shc"))).cast("long"))
-      .where(round(col("common").cast("double")
-        / (size(col("shb")) + size(col("shc")) - col("common")), 6) >= threshold)
-      .select(col("b_id").as("doc_id")).distinct()
+    // doc_a = batch, doc_b = corpus
+    val cand = Dedup.bandJoin(ba, ca).select(col("doc_a"), col("doc_b")).distinct()
+    Dedup.verifyCandidates(ba, ca, cand, "jaccard", threshold, Dedup.jaccardScore)
+      .select(col("doc_a").as("doc_id")).distinct()
   }
 
   /** PUBLIC API: flag docs in `corpus` sharing at least one word-`n`-gram

@@ -73,12 +73,12 @@ object Dedup {
   private val registry = new graft.PersistRegistry[String]
 
   /** PUBLIC API: unpersist every relation the dedup stack cached for
-    * `session` — the memoized shingle arrays plus all band-signature /
-    * simhash-chunk persists — and drop the memo entries so the next call
-    * rebuilds cleanly. Returns the number of relations unpersisted.
-    * Long-lived services (a dedup endpoint, a notebook session) call this
-    * between corpora; one-shot jobs can let the session teardown reclaim
-    * the blocks instead. */
+    * `session` — the memoized shingle arrays of the declared queries and
+    * the arrays [[dedupCorpus]] persists — and drop the memo entries so
+    * the next call rebuilds cleanly. Returns the number of relations
+    * unpersisted. Long-lived services (a dedup endpoint, a notebook
+    * session) call this between corpora; one-shot jobs can let the
+    * session teardown reclaim the blocks instead. */
   def clearCaches(session: SparkSession): Int = registry.clear(session)
 
   /** Memoized PERSISTED distinct-shingle arrays per (session, dir): the
@@ -126,33 +126,27 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
+  /** The one (band, sig) equi-join of the MinHash-LSH stack: (doc_a,
+    * doc_b, band) for every band on which a doc of `a` and a doc of `b`
+    * ([[shingleArrays]] shape) share a signature. Self pairs
+    * ([[candidatesFromArrays]]) and batch × corpus pairs
+    * ([[Curation.incrementalRejects]]) both enter here. Nothing is
+    * persisted: when the join shuffles, both sides of a self-join share
+    * one (band, sig) exchange through exchange reuse, so the map-side
+    * signature pass runs once; when AQE broadcasts, it runs twice over a
+    * broadcast-sized input. */
+  private[llm] def bandJoin(a: DataFrame, b: DataFrame): DataFrame =
+    bandSigsFromArrays(a).select(col("doc_id").as("doc_a"), col("band"), col("sig"))
+      .join(bandSigsFromArrays(b).select(col("doc_id").as("doc_b"), col("band"), col("sig")),
+        Seq("band", "sig"))
+
   /** PUBLIC API: MinHash-LSH candidate pairs from [[shingleArrays]] shape
-    * (doc_id, sh: array<string>); output (doc_a, doc_b, n_bands).
-    * The band-sig relation feeds BOTH sides of the self-join, so it is
-    * persisted by default — otherwise the whole map-side signature pass
-    * runs twice. (Tiny: 4 rows/doc of (id, band, sig). Lifetime: LRU
-    * eviction, same policy as the jaccard cache; long-lived services
-    * should unpersist.) Callers that invoke this REPEATEDLY on small
-    * inputs — e.g. once per streaming micro-batch — pass
-    * `persistSigs = false`: the signature pass runs twice but registers
-    * nothing with the CacheManager, so nothing accumulates. Persisted
-    * sigs are reclaimed by [[clearCaches]]. */
-  def candidatesFromArrays(da: DataFrame, persistSigs: Boolean = true): DataFrame = {
-    val sigs0 = bandSigsFromArrays(da)
-    val sigs = if (persistSigs) registry.persist(sigs0) else sigs0
-    val a = sigs.select(col("doc_id").as("doc_a"), col("band"), col("sig"))
-    val b = sigs.select(col("doc_id").as("doc_b"), col("band"), col("sig"))
-    a.join(b, Seq("band", "sig")).where(col("doc_a") < col("doc_b"))
+    * (doc_id, sh: array<string>); output (doc_a, doc_b, n_bands) with
+    * doc_a < doc_b. Registers nothing with the CacheManager. */
+  def candidatesFromArrays(da: DataFrame): DataFrame =
+    bandJoin(da, da).where(col("doc_a") < col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(countDistinct(col("band")).as("n_bands"))
-  }
-
-  /** PUBLIC API (exploded-shape adapter): candidate pairs over any
-    * (doc_id, bg) shingle set from [[shingleSet]] — regroups to arrays
-    * (one shuffle), then takes the map-side signature path. */
-  def candidatesFrom(sh: DataFrame): DataFrame =
-    candidatesFromArrays(
-      sh.groupBy(col("doc_id")).agg(collect_list(col("bg")).as("sh")))
 
   /** candidate pairs: docs sharing ≥1 LSH band, with matching-band count. */
   private[llm] def candidates(s: SparkSession, dir: String): DataFrame =
@@ -198,8 +192,8 @@ object Dedup {
     *
     * The shingle arrays feed both the signature pass and the verify join,
     * so they persist (reclaimed by [[clearCaches]]); per-micro-batch
-    * callers that must register nothing with the CacheManager enter at
-    * [[selfDedupLosers]] with `persistSigs = false` instead. */
+    * callers that must register nothing with the CacheManager hold their
+    * own arrays and enter at [[selfDedupLosers]] instead. */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3): DataFrame = {
     val da = registry.persist(shingleArrays(df, idCol, textCol, n, dedup = true))
@@ -212,11 +206,9 @@ object Dedup {
     * ([[shingleArrays]] dedup=true shape). The one definition of the
     * candidates → jaccard-verify → components → losers policy — the
     * declared keep-canonical query and the streaming self-dedup both
-    * enter here. `persistSigs=false` for repeated small-input callers
-    * (see [[candidatesFromArrays]]). */
-  def selfDedupLosers(da: DataFrame, threshold: Double,
-      persistSigs: Boolean = true): DataFrame = {
-    val verified = verifyCandidates(da, candidatesFromArrays(da, persistSigs),
+    * enter here. Persists nothing itself. */
+  def selfDedupLosers(da: DataFrame, threshold: Double): DataFrame = {
+    val verified = verifyCandidates(da, da, candidatesFromArrays(da),
       "jaccard", threshold, jaccardScore)
     connectedComponents(
         verified.select(col("doc_a"), col("doc_b")), "doc_a", "doc_b")
@@ -262,13 +254,12 @@ object Dedup {
               .as(s"cval$c")
           }
       val sims = withVec.select(simCols: _*)
-      // both self-join sides read `chunks` — persist so the map-side
-      // SimHashVec pass runs once (reclaimed by clearCaches, same policy
-      // as the minhash band sigs)
-      val chunks = registry.persist(sims.select(col("doc_id"), col("simhash"),
+      // both self-join sides read `chunks`; a shuffled join shares one
+      // (c, cval) exchange between them (same as the minhash band join)
+      val chunks = sims.select(col("doc_id"), col("simhash"),
         explode(array((0 until 4).map(c =>
           struct(lit(c).as("c"), col(s"cval$c").as("cval"))): _*)).as("ch"))
-        .select(col("doc_id"), col("simhash"), col("ch.c").as("c"), col("ch.cval").as("cval")))
+        .select(col("doc_id"), col("simhash"), col("ch.c").as("c"), col("ch.cval").as("cval"))
       val ca = chunks.select(col("doc_id").as("doc_a"), col("simhash").as("sim_a"),
         col("c"), col("cval"))
       val cb = chunks.select(col("doc_id").as("doc_b"), col("simhash").as("sim_b"),
@@ -302,8 +293,7 @@ object Dedup {
     // so the pair population never approaches all-pairs at any scale.
     "sim_topk_pairs" -> { (s, dir) =>
       val da = docArraysCached(s, dir)
-      val cand = candidatesFromArrays(da)
-      verifyCandidates(da, cand, "jaccard", 0.0, jaccardScore)
+      verifyCandidates(da, da, candidatesFromArrays(da), "jaccard", 0.0, jaccardScore)
         .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b"))
         .limit(20)
     },
@@ -332,10 +322,12 @@ object Dedup {
   )
 
   /** PUBLIC API: exact set-overlap verification of candidate pairs against
-    * per-doc DISTINCT shingle arrays (`da` in [[shingleArrays]] shape with
-    * dedup=true, `cand` as (doc_a, doc_b)): one `array_intersect` per
-    * candidate, scored by `score(common, |A|, |B|)` (Jaccard, containment,
-    * …), rounded to 6 and thresholded.
+    * per-doc DISTINCT shingle arrays (`da` holds the doc_a side and `db`
+    * the doc_b side, both in [[shingleArrays]] shape with dedup=true — the
+    * same relation for self pairs; `cand` as (doc_a, doc_b)): one
+    * `array_intersect` per candidate, scored by `score(common, |A|, |B|)`
+    * (Jaccard, containment, …), rounded to 6 and thresholded; output
+    * (doc_a, doc_b, `scoreName`).
     *
     * Join strategy is deliberately UNHINTED: at bench scale AQE broadcasts
     * the LSH-small candidate side at runtime (PlanSpec asserts the final
@@ -343,10 +335,10 @@ object Dedup {
     * big for any broadcast ceiling — the SAME code degrades to shuffle
     * joins on doc_id with the shingle arrays carried once each, instead of
     * OOMing the driver on a hardcoded broadcast() hint. */
-  def verifyCandidates(da: DataFrame, cand: DataFrame, scoreName: String,
+  def verifyCandidates(da: DataFrame, db: DataFrame, cand: DataFrame, scoreName: String,
       threshold: Double, score: (Column, Column, Column) => Column): DataFrame = {
     val withA = da.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
-    val withB = da.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
+    val withB = db.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
     withB.join(withA.join(cand.select(col("doc_a"), col("doc_b")), "doc_a"), "doc_b")
       .withColumn("common", size(array_intersect(col("sha"), col("shb"))).cast("long"))
       .withColumn(scoreName,
@@ -359,8 +351,7 @@ object Dedup {
   private def verifiedPairs(s: SparkSession, dir: String, scoreName: String,
       threshold: Double, score: (Column, Column, Column) => Column): DataFrame = {
     val da = docArraysCached(s, dir)
-    val cand = candidatesFromArrays(da)
-    verifyCandidates(da, cand, scoreName, threshold, score)
+    verifyCandidates(da, da, candidatesFromArrays(da), scoreName, threshold, score)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 

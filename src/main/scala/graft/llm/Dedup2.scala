@@ -22,9 +22,8 @@ object Dedup2 {
     // engines emit, so the bucket edges are exact.
     "dedup_threshold_sweep" -> { (s, dir) =>
       val da = Dedup.docArraysCached(s, dir)
-      val scored = Dedup.verifyCandidates(da, Dedup.candidatesFromArrays(da),
-        "jaccard", 0.3, (common, na, nb) =>
-          common.cast("double") / (na + nb - common))
+      val scored = Dedup.verifyCandidates(da, da, Dedup.candidatesFromArrays(da),
+        "jaccard", 0.3, Dedup.jaccardScore)
       val thetas = Seq(0.3, 0.5, 0.7, 0.9)
       val aggs = thetas.zipWithIndex.flatMap { case (t, i) => Seq(
         sum(when(col("jaccard") >= t, 1L).otherwise(0L)).as(s"p$i"),
@@ -67,7 +66,6 @@ object Dedup2 {
     // sizes. Only overlapping pairs emit — a zero row would mean a
     // shingle-free source pair.
     "text_source_ngram_overlap" -> { (s, dir) =>
-      import org.apache.spark.sql.types.DoubleType
       val d = Tables(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
       val sh = Dedup.shingleArrays(d, "doc_id", "text", 3, dedup = true)
@@ -95,8 +93,7 @@ object Dedup2 {
         .join(broadcast(sizes.select(col("source").as("src_b"),
           col("nv").as("nb"))), "src_b")
         .select(col("src_a"), col("src_b"), col("common"),
-          round(col("common").cast(DoubleType) /
-            (col("na") + col("nb") - col("common")).cast(DoubleType), 6)
+          round(Dedup.jaccardScore(col("common"), col("na"), col("nb")), 6)
             .as("jaccard"))
         .orderBy("src_a", "src_b")
     },
@@ -150,7 +147,7 @@ object Dedup2 {
         // |est − exact| per pair is a fixed IEEE tree over identical
         // integers; the mean folds through exact decimal terms
         .withColumn("err", abs(col("est16") / lit(16.0) -
-          col("common") / (col("na") + col("nb") - col("common"))))
+          Dedup.jaccardScore(col("common"), col("na"), col("nb"))))
         .groupBy("est16")
         .agg(count(lit(1)).as("n_pairs"),
           round(sum(col("err").cast(DecimalType(18, 12))).cast(DoubleType) /

@@ -41,8 +41,7 @@ object Extras20 {
         .unionByName(docs0.select((col("doc_id") * 2 + 1).as("did"),
           expr("substring(text, instr(text, ' ') + 1)").as("text")))
       val cand = llm.Dedup.candidatesFromArrays(
-        llm.Dedup.shingleArrays(corpus, "did", "text", 3),
-        persistSigs = false)
+        llm.Dedup.shingleArrays(corpus, "did", "text", 3))
       val planted = docs0.select((col("doc_id") * 2).as("doc_a"),
         (col("doc_id") * 2 + 1).as("doc_b"))
       val nP = planted.agg(count(lit(1)).as("n_planted"))

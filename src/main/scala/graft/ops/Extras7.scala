@@ -183,26 +183,9 @@ object Extras7 {
         .orderBy("segment")
     },
 
-    // the DISTRIBUTED twin of window_ntile_percent (the one §2.5 query
-    // allowlisted as a single-partition window because its declared
-    // semantics are one global ORDER): identical quartile/percent_rank/
-    // cume_dist values derived arithmetically from the two-level
-    // prefix-sum rank — percent_rank = (rn−1)/(n−1), cume_dist = rn/n
-    // (the order key is unique, so rank == peer-group max) — at
-    // shard-count parallelism. Same oracle as the window form.
-    "window_ntile_percent_distributed" -> { (s, dir) =>
-      val cust = Tables(s, dir, "customer").select("c_custkey", "c_acctbal")
-      // ONE rank pass; ntile derives arithmetically from (rn, n) — a
-      // second kernel pass would re-rank the identical order for nothing
-      GraftOps.distributedRank(cust, Seq("c_acctbal", "c_custkey"), "rn")
-        .crossJoin(broadcast(cust.agg(count(lit(1)).as("n"))))
-        .select(col("c_custkey"), col("c_acctbal"),
-          graft.llm.Chunking.ntileBucket(col("rn"), col("n"), 4).as("quartile"),
-          ((col("rn") - 1).cast(DoubleType) / (col("n") - 1).cast(DoubleType))
-            .as("pr"),
-          (col("rn").cast(DoubleType) / col("n").cast(DoubleType)).as("cd"))
-        .orderBy("c_custkey")
-    },
+    // the distributed twin of the §2.5 window_ntile_percent: both keys run
+    // the one distributedRank form (Windows.ntilePercent) and one oracle
+    "window_ntile_percent_distributed" -> Windows.ntilePercent,
 
     // Pareto concentration curve: customers ranked by revenue into
     // deciles (distributedNtile on the NEGATED exact-cents revenue —
@@ -443,14 +426,7 @@ object Extras7 {
         |  FROM rfm)
         |SELECT segment, count(*) AS n_customers, cast(sum(f_cnt) as bigint) AS n_orders
         |FROM coded GROUP BY 1 ORDER BY 1""".stripMargin,
-    "window_ntile_percent_distributed" ->
-      """SELECT c_custkey, c_acctbal,
-        |  ntile(4) OVER w AS quartile,
-        |  percent_rank() OVER w AS pr,
-        |  cume_dist() OVER w AS cd
-        |FROM customer
-        |WINDOW w AS (ORDER BY c_acctbal, c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
+    "window_ntile_percent_distributed" -> Windows.sqlNtilePercent,
     "analytics_pareto_curve" ->
       """WITH cr AS (SELECT o_custkey,
         |    cast(sum(cast(o_totalprice as decimal(18,4))) * 10000 as bigint) AS rev_c

@@ -14,6 +14,38 @@ import org.apache.spark.sql.expressions.Window
   */
 object Windows {
 
+  /** ntile(4) / percent_rank / cume_dist over customer account balance —
+    * the body of both `window_ntile_percent` and
+    * `window_ntile_percent_distributed`. No global window: with a UNIQUE
+    * order composite (c_acctbal, c_custkey), SQL's ntile / percent_rank /
+    * cume_dist are pure arithmetic on the distributedRank global rank —
+    *   ntile(k): first n%k buckets get ⌈n/k⌉ rows (the SQL bucket rule),
+    *   percent_rank = (rn−1)/(n−1)  (0 when n = 1),
+    *   cume_dist   = rn/n           (unique order ⇒ no tie plateau) —
+    * so output is row-for-row identical to the window form (the DuckDB
+    * oracle, [[sqlNtilePercent]], runs the plain window SQL) at shard
+    * parallelism. */
+  private[ops] val ntilePercent: Q = { (s, dir) =>
+    val c = Tables(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
+    GraftOps.distributedRank(c, Seq("c_acctbal", "c_custkey"), "__rn")
+      .crossJoin(broadcast(c.agg(count(lit(1)).as("__n"))))
+      .select(col("c_custkey"), col("c_acctbal"),
+        graft.llm.Chunking.ntileBucket(col("__rn"), col("__n"), 4).as("quartile"),
+        when(col("__n") > 1, (col("__rn") - 1).cast("double") /
+          (col("__n") - 1).cast("double")).otherwise(0.0).as("pr"),
+        (col("__rn").cast("double") / col("__n").cast("double")).as("cd"))
+      .orderBy(col("c_custkey"))
+  }
+
+  /** DuckDB oracle of [[ntilePercent]]. */
+  private[ops] val sqlNtilePercent =
+    """SELECT c_custkey, c_acctbal,
+      |  ntile(4) OVER w AS quartile,
+      |  percent_rank() OVER w AS pr,
+      |  cume_dist() OVER w AS cd
+      |FROM customer WINDOW w AS (ORDER BY c_acctbal, c_custkey)
+      |ORDER BY c_custkey""".stripMargin
+
   val queries: Map[String, Q] = Map(
     // top-3 orders per customer by price (row_number + rank + dense_rank)
     "window_rank_topn" -> { (s, dir) =>
@@ -70,29 +102,9 @@ object Windows {
         .orderBy(col("d"))
     },
 
-    // ntile / percent_rank / cume_dist over account balance. Through
-    // round 11 this was the one declared query with a FACT-SIZED global
-    // window (ntile(4) OVER (ORDER BY ...) — all customers into one
-    // partition, the classic single-node bottleneck at scale). Round 12
-    // reworks it onto the distributedRank prefix-sum kernel: with a
-    // UNIQUE order composite (c_acctbal, c_custkey), SQL's ntile /
-    // percent_rank / cume_dist are pure arithmetic on the global rank —
-    //   ntile(k): first n%k buckets get ⌈n/k⌉ rows (the SQL bucket rule),
-    //   percent_rank = (rn−1)/(n−1)  (0 when n = 1),
-    //   cume_dist   = rn/n           (unique order ⇒ no tie plateau) —
-    // so output is row-for-row identical to the window form (the DuckDB
-    // oracle still runs the plain window SQL) at shard parallelism.
-    "window_ntile_percent" -> { (s, dir) =>
-      val c = Tables(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
-      GraftOps.distributedRank(c, Seq("c_acctbal", "c_custkey"), "__rn")
-        .crossJoin(broadcast(c.agg(count(lit(1)).as("__n"))))
-        .select(col("c_custkey"), col("c_acctbal"),
-          graft.llm.Chunking.ntileBucket(col("__rn"), col("__n"), 4).as("quartile"),
-          when(col("__n") > 1, (col("__rn") - 1).cast("double") /
-            (col("__n") - 1).cast("double")).otherwise(0.0).as("pr"),
-          (col("__rn").cast("double") / col("__n").cast("double")).as("cd"))
-        .orderBy(col("c_custkey"))
-    }
+    // ntile / percent_rank / cume_dist over account balance (see
+    // [[ntilePercent]]; window_ntile_percent_distributed is the same query)
+    "window_ntile_percent" -> ntilePercent
   )
 
   val oracle: Map[String, String] = Map(
@@ -129,12 +141,6 @@ object Windows {
         |WINDOW wr AS (ORDER BY d ROWS BETWEEN 6 PRECEDING AND CURRENT ROW),
         |       wg AS (ORDER BY day_idx RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
         |ORDER BY d""".stripMargin,
-    "window_ntile_percent" ->
-      """SELECT c_custkey, c_acctbal,
-        |  ntile(4) OVER w AS quartile,
-        |  percent_rank() OVER w AS pr,
-        |  cume_dist() OVER w AS cd
-        |FROM customer WINDOW w AS (ORDER BY c_acctbal, c_custkey)
-        |ORDER BY c_custkey""".stripMargin
+    "window_ntile_percent" -> sqlNtilePercent
   )
 }

@@ -93,15 +93,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     ext.injectTableFunction(tfn("graft_minhash_candidates",
       "graft_minhash_candidates(table, idCol, textCol, shingleWidth) - " +
-        "LSH-bucketed near-duplicate candidate pairs (id_a, id_b)",
+        "LSH-bucketed near-duplicate candidate pairs (doc_a, doc_b, n_bands)",
       exprs => {
         val f = "graft_minhash_candidates"
-        val spark = SparkSession.active
-        graft.GraftOps.minhashCandidates(graft.GraftOps.shingleSet(
-          spark.table(strLiteral(f, "table", exprs(0))),
+        graft.GraftOps.nearDuplicates(
+          SparkSession.active.table(strLiteral(f, "table", exprs(0))),
           strLiteral(f, "idCol", exprs(1)),
           strLiteral(f, "textCol", exprs(2)),
-          intLiteral(f, "shingleWidth", exprs(3)))).queryExecution.logical
+          intLiteral(f, "shingleWidth", exprs(3))).queryExecution.logical
       }))
     ext.injectTableFunction(tfn("graft_asof_join",
       "graft_asof_join(leftTable, rightTable, keyCol, leftTime, rightTime, " +

@@ -210,7 +210,7 @@ object StreamOps {
     * corpus, so per-batch cost stays ∝ batch (the corpus side is served
     * from the cached state, never re-shingled, and nothing accumulates in
     * the CacheManager: the per-batch array cache is unpersisted in a
-    * finally, the candidate pass runs with persistSigs=false). The lazy
+    * finally, and the candidate pass persists nothing). The lazy
     * union adds one plan leaf per batch; every 64 batches the union is
     * compacted into a single checkpoint (the one corpus-sized write,
     * amortized). At production scale the state is a STORED signature/
@@ -244,8 +244,7 @@ object StreamOps {
       try {
         // (1) batch-internal near-dups → keep the min-id copy per cluster
         // (the ONE keep-canonical kernel, Dedup.selfDedupLosers)
-        val baSelf = ba.join(
-          Dedup.selfDedupLosers(ba, threshold, persistSigs = false),
+        val baSelf = ba.join(Dedup.selfDedupLosers(ba, threshold),
           Seq("doc_id"), "left_anti")
         // (2) vs the corpus-so-far: array kernel over the CACHED state
         val rejects = Curation.incrementalRejects(corpusArrays, baSelf, threshold)

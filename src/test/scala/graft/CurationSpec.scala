@@ -148,14 +148,62 @@ class CurationSpec extends SparkSuite {
   test("clearDedupCaches reclaims every dedup persist; queries still work after") {
     val docs = (0 until 20).map(i => (i.toLong, base + s" extra$i"))
       .toDF("doc_id", "text")
-    // persisting calls: corpus dedup (arrays + band sigs)
+    GraftOps.clearDedupCaches(spark)
+    // the one persisting call: corpus dedup holds its shingle arrays
     GraftOps.dedupCorpus(docs, "doc_id", "text", 0.3).count()
-    assert(GraftOps.clearDedupCaches(spark) >= 2,
-      "dedupCorpus should have registered the arrays + band sigs")
+    assert(GraftOps.clearDedupCaches(spark) == 1,
+      "dedupCorpus should have registered exactly its shingle arrays")
     // caches rebuild cleanly after a clear: the declared jaccard query
     // (memoized docArraysCached path) still answers
     assert(SparkEntry.queries("dedup_ngram_jaccard")(spark, sf).count() >= 0)
     assert(GraftOps.clearDedupCaches(spark) >= 1, "memoized arrays not re-registered")
+  }
+
+  test("nearDuplicates and jaccardDuplicates register nothing with the dedup registry") {
+    val docs = (0 until 20).map(i => (i.toLong, base + s" extra$i"))
+      .toDF("doc_id", "text")
+    GraftOps.clearDedupCaches(spark)
+    (1 to 3).foreach { _ =>
+      assert(GraftOps.nearDuplicates(docs, "doc_id", "text").count() > 0)
+      assert(GraftOps.jaccardDuplicates(docs, "doc_id", "text", 0.3).count() > 0)
+    }
+    assert(GraftOps.clearDedupCaches(spark) == 0,
+      "the LSH candidate and verify paths should persist nothing")
+  }
+
+  test("incrementalRejects == the batch ids of jaccardDuplicates' corpus × batch pairs") {
+    // one LSH band join and one Jaccard verify behind both callers: the
+    // batch-vs-corpus rejects must be exactly the batch side of the C × B
+    // pairs the self-dedup pass finds over C ∪ B (ids: C < 1000 ≤ B)
+    val rng = new scala.util.Random(7)
+    val vocab = (0 until 60).map(i => s"w$i")
+    def doc(): Vector[String] = Vector.fill(80)(vocab(rng.nextInt(vocab.size)))
+    def edit(d: Vector[String], k: Int): Vector[String] =
+      (0 until k).foldLeft(d)((acc, j) => acc.updated((j * 37 + 5) % acc.size, s"edit$j"))
+    val corpusDocs = Vector.fill(40)(doc())
+    val corpus = corpusDocs.zipWithIndex.map { case (d, i) => (i.toLong, d.mkString(" ")) }
+    // near-dups of corpus docs at 0–24 edits (Jaccard ≈ 1 down to ≈ 0.2),
+    // a batch-internal near-dup pair, and unrelated docs
+    val planted = (0 until 25).map(k => edit(corpusDocs(k), k))
+    val own = doc()
+    val batchDocs = planted ++ Seq(own, edit(own, 2)) ++ Vector.fill(10)(doc())
+    val batch = batchDocs.zipWithIndex.map { case (d, i) => (1000L + i, d.mkString(" ")) }
+    val c = corpus.toDF("doc_id", "text")
+    val b = batch.toDF("doc_id", "text")
+    def arrays(df: org.apache.spark.sql.DataFrame) =
+      llm.Dedup.shingleArrays(df, "doc_id", "text", 3, dedup = true)
+    val found = Seq(0.3, 0.7).map { theta =>
+      val rejects = llm.Curation.incrementalRejects(arrays(c), arrays(b), theta)
+        .collect().map(_.getLong(0)).toSet
+      val crossPairs = GraftOps.jaccardDuplicates(c.unionByName(b), "doc_id", "text", theta)
+        .where(col("doc_a") < 1000L && col("doc_b") >= 1000L)
+        .select("doc_b").collect().map(_.getLong(0)).toSet
+      assert(rejects == crossPairs, s"θ=$theta: rejects $rejects vs pairs $crossPairs")
+      assert(rejects.nonEmpty, s"θ=$theta: no planted near-dup found")
+      rejects
+    }
+    assert(found(1).subsetOf(found(0)) && found(1) != found(0),
+      s"θ=0.7 should keep fewer rejects than θ=0.3: $found")
   }
 
   test("sweep-end hygiene: dedup queries then clearDedupCaches leave no persisted blocks behind") {

@@ -244,6 +244,33 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("dedup_minhash's shuffled LSH self-join computes its signatures once, uncached") {
+    // with broadcast off the (band, sig) self-join shuffles both sides;
+    // the second side must read the first side's exchange (one
+    // materialized band-sig exchange + one ReusedExchange), so the
+    // map-side signature pass runs once without any persist
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val df = SparkEntry.queries("dedup_minhash")(spark, sf)
+      df.collect()
+      val finalPlan = df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      def onBandSig(l: String) =
+        l.contains("Exchange hashpartitioning(band#") && l.contains(" sig#")
+      val nEx = finalPlan.linesIterator.count(l => onBandSig(l) && !l.contains("ReusedExchange"))
+      val nReused = finalPlan.linesIterator.count(l => onBandSig(l) && l.contains("ReusedExchange"))
+      assert(nEx == 1 && nReused == 1,
+        s"expected 1 band-sig exchange + 1 ReusedExchange, got $nEx + $nReused:\n${finalPlan.take(4000)}")
+      assert(!finalPlan.contains("InMemoryTableScan"),
+        s"the LSH join reads a cached relation:\n${finalPlan.take(4000)}")
+    } finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("term frequencies are map-side: no shuffle keyed on (doc_id, word)") {
     // the old tf relation shuffled every token occurrence into a
     // groupBy(doc_id, word); TokenCounts builds it per document, so the

@@ -104,4 +104,22 @@ class Round12Spec extends SparkSuite {
       plan.toString.contains("hashpartitioning"),
       "expected distributed exchange in the reworked ntile plan")
   }
+
+  test("both ntile/percent_rank queries give SQL's percent_rank 0.0 on a one-row customer table") {
+    // percent_rank() is 0 for the only row of a one-row window; the
+    // arithmetic form (rn−1)/(n−1) needs its n = 1 guard in both keys
+    val dir = java.nio.file.Files.createTempDirectory("graft-one-customer").toString
+    try {
+      spark.read.parquet(s"$sf/customer.parquet").orderBy("c_custkey").limit(1)
+        .write.parquet(s"$dir/customer.parquet")
+      Seq("window_ntile_percent", "window_ntile_percent_distributed").foreach { q =>
+        val rows = SparkEntry.queries(q)(spark, dir)
+          .select("quartile", "pr", "cd").collect()
+        assert(rows.length == 1, s"$q: ${rows.mkString(",")}")
+        val r = rows.head
+        assert(r.getAs[Number]("quartile").longValue == 1L &&
+          r.getAs[Double]("pr") == 0.0 && r.getAs[Double]("cd") == 1.0, s"$q: $r")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
 }
