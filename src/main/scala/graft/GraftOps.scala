@@ -14,8 +14,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * reference's history feature.
   *
   * LLM-pipeline operators are delegated below, as are clustering/CDC
-  * (connected components, latest-wins upsert), the generic as-of join,
-  * declarative [[graft.clean.Rule]] validation, and batch sessionization.
+  * (connected components, latest-wins upsert), the one as-of join
+  * (point-in-time lookups included), declarative [[graft.clean.Rule]]
+  * validation, and batch sessionization.
   * Streaming transforms live in [[graft.streaming.StreamOps]] (same code
   * paths serve batch and readStream DataFrames). Multimodal binary
   * plumbing in [[graft.llm.Multimodal]].
@@ -385,15 +386,6 @@ object GraftOps {
     ops.IntervalJoin.overlapSelfJoin(df, idCol, partCols, startCol, endCol,
       cellSeconds)
 
-  /** merge-sorted point-in-time lookup ("value as of t") — probes
-    * unioned into the version stream, one per-key carry-forward window,
-    * no range join ([[graft.ops.Extras12.pointInTimeLookup]]). */
-  def pointInTimeLookup(history: DataFrame, probes: DataFrame,
-      keyCol: String, tsCol: String, tieCol: String,
-      probeTsCol: String): DataFrame =
-    ops.Extras12.pointInTimeLookup(history, probes, keyCol, tsCol, tieCol,
-      probeTsCol)
-
   /** lower weighted median per group over the distinct-value distributed
     * prefix sum — never a row-sized sort
     * ([[graft.ops.Extras10.weightedMedianByGroup]]). */
@@ -421,13 +413,17 @@ object GraftOps {
     ops.Extras6.scd2History(changes, keyCol, tsCol, tieCols)
 
   /** apply a change feed over a base table, highest version wins per key —
-    * one hash aggregate, no window. */
+    * one aggregate, no window; a (key, version) tie keeps the row with
+    * the largest orderable payload, in column order. */
   def upsertLatestWins(base: DataFrame, changes: DataFrame,
       keyCol: String, versionCol: String): DataFrame =
     ops.Extras4.upsertLatestWins(base, changes, keyCol, versionCol)
 
-  /** as-of join: latest right payload at-or-before each left row's time,
-    * per key — one union + window pass, no range join. */
+  /** THE as-of join: latest right payload at-or-before each left row's
+    * time, per key — one union + window pass, no range join. Right rows
+    * sharing a (key, time) tie-break to the largest orderable payload in
+    * `payloadCols` order, so a point-in-time lookup lists its ingestion
+    * id first. */
   def asofJoin(left: DataFrame, right: DataFrame, keyCol: String,
       leftTime: String, rightTime: String, payloadCols: Seq[String]): DataFrame =
     ops.Joins.asofJoin(left, right, keyCol, leftTime, rightTime, payloadCols)

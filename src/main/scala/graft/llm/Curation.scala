@@ -200,20 +200,28 @@ object Curation {
     val probes = Similarity.probeCentroids(
       queries.select(col("qid"), col("qv"), col("qs"), col("qg")),
       centroids, nProbe)
-    val wApprox = Window.partitionBy(col("qid"))
-      .orderBy(col("approx").desc, col("vec_id"))
-    val wExact = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    broadcast(probes).join(assigned, "cid")
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("approx",
-        round(Similarity.cosine(col("qg"), col("q")) * col("qs") * col("s"), 6)
-          + lit(0.0))
-      .withColumn("arn", row_number().over(wApprox))
+    rescoreTopK(
+      broadcast(probes).join(assigned, "cid").where(col("vec_id") =!= col("qid")),
+      Similarity.cosine(col("qg"), col("q")) * col("qs") * col("s"), kApprox, k)
+  }
+
+  /** THE two-stage quantized-ANN ranker over (qid, vec_id, qv, v, …)
+    * candidate pairs: keep each query's `kApprox` best by `approxScore`
+    * (rounded to 6 places), exact-rescore only those by cosine(qv, v),
+    * keep the top `k` → (qid, rank, vec_id, cos, approx); vec_id breaks
+    * score ties in both stages. */
+  private def rescoreTopK(pairs: DataFrame, approxScore: Column, kApprox: Int,
+      k: Int): DataFrame = {
+    val byQuery = Window.partitionBy(col("qid"))
+    pairs
+      .withColumn("approx", round(approxScore, 6) + lit(0.0))
+      .withColumn("arn",
+        row_number().over(byQuery.orderBy(col("approx").desc, col("vec_id"))))
       .where(col("arn") <= kApprox)
       .withColumn("cos",
         round(Similarity.cosine(col("qv"), col("v")), 6) + lit(0.0))
-      .withColumn("rank", row_number().over(wExact))
+      .withColumn("rank",
+        row_number().over(byQuery.orderBy(col("cos").desc, col("vec_id"))))
       .where(col("rank") <= k)
       .select(col("qid"), col("rank"), col("vec_id"), col("cos"), col("approx"))
   }
@@ -338,21 +346,8 @@ object Curation {
         .select(col("vec_id").as("qid"), col("label"), col("v").as("qv"),
           col("s").as("qs"), col("q").as("qq"))
       val c = all.select(col("vec_id"), col("label"), col("v"), col("s"), col("q"))
-      val wApprox = Window.partitionBy(col("qid"))
-        .orderBy(col("approx").desc, col("vec_id"))
-      val wExact = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      q.join(c, Seq("label")).where(col("vec_id") =!= col("qid"))
-        .withColumn("approx",
-          round(Similarity.cosine(col("qq"), col("q")) * col("qs") * col("s"), 6)
-            + lit(0.0))
-        .withColumn("arn", row_number().over(wApprox))
-        .where(col("arn") <= 10)
-        .withColumn("cos",
-          round(Similarity.cosine(col("qv"), col("v")), 6) + lit(0.0))
-        .withColumn("rank", row_number().over(wExact))
-        .where(col("rank") <= 3)
-        .select(col("qid"), col("rank"), col("vec_id"), col("cos"), col("approx"))
+      rescoreTopK(q.join(c, Seq("label")).where(col("vec_id") =!= col("qid")),
+          Similarity.cosine(col("qq"), col("q")) * col("qs") * col("s"), 10, 3)
         .orderBy(col("qid"), col("rank"))
     },
 
@@ -370,21 +365,9 @@ object Curation {
         .select(col("vec_id").as("qid"), col("label"), col("v").as("qv"),
           col("s").as("qs"), col("q8").as("qq8"))
       val c = all.select(col("vec_id"), col("label"), col("v"), col("s"), col("q8"))
-      val wApprox = Window.partitionBy(col("qid"))
-        .orderBy(col("approx").desc, col("vec_id"))
-      val wExact = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      q.join(c, Seq("label")).where(col("vec_id") =!= col("qid"))
-        .withColumn("approx",
-          round(Similarity.int8Dot(col("qq8"), col("q8")).cast("double")
-            * col("qs") * col("s"), 6) + lit(0.0))
-        .withColumn("arn", row_number().over(wApprox))
-        .where(col("arn") <= 10)
-        .withColumn("cos",
-          round(Similarity.cosine(col("qv"), col("v")), 6) + lit(0.0))
-        .withColumn("rank", row_number().over(wExact))
-        .where(col("rank") <= 3)
-        .select(col("qid"), col("rank"), col("vec_id"), col("cos"), col("approx"))
+      rescoreTopK(q.join(c, Seq("label")).where(col("vec_id") =!= col("qid")),
+          Similarity.int8Dot(col("qq8"), col("q8")).cast("double")
+            * col("qs") * col("s"), 10, 3)
         .orderBy(col("qid"), col("rank"))
     }
   )

@@ -400,15 +400,21 @@ object Dedup {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     def save(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    val p = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     // r15 (guide §2.4 — same-keyed ops share one exchange): every round
     // joins `edges` on src, and the init aggregate groups by src; persist
     // the edge list ALREADY hash-partitioned and sorted by src, so the
     // per-round SortMergeJoin re-shuffles and re-sorts only the
     // node-sized labels side — the edge-scale exchange+sort is paid once
     // at cache materialization instead of once per round (the cached
-    // relation's partitioning/ordering are preserved by persist).
-    val edges = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
+    // relation's partitioning/ordering are preserved by persist). Both
+    // orientations come out of ONE reference to `pairs` (explode of a
+    // 2-slot array): a union of two references would plan the caller's
+    // pair pipeline once per branch.
+    val (a, b) = (col(aCol), col(bCol))
+    val edges = pairs
+      .select(explode(array(struct(a.as("src"), b.as("dst")),
+        struct(b.as("src"), a.as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
       .repartition(col("src"))
       .sortWithinPartitions("src")
       .persist()

@@ -2,10 +2,9 @@ package graft.ops
 
 import graft._
 import graft.Tables.dec
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Round-8 fifth-session batch 9: cohort LTV curves, market
   * concentration (HHI), grouped mode, and the SCD2 point-in-time
@@ -15,62 +14,21 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * grain — dimension-sized AFTER one aggregate, so its window
   * partitions are months, not customers; HHI's share terms are
   * dimension-sized after the (nation, supplier) aggregate; the
-  * point-in-time lookup is the MERGE-SORTED form — probes are unioned
-  * into the version stream and a per-key carry-forward window resolves
-  * every probe in one pass, no range join, no per-probe scan (the
-  * 100 TB shape for "value as of t" against a billion-row history).
+  * point-in-time lookup is the MERGE-SORTED form of
+  * [[graft.GraftOps.asofJoin]] — probes are unioned into the version
+  * stream and a per-key carry-forward window resolves every probe in
+  * one pass, no range join, no per-probe scan (the 100 TB shape for
+  * "value as of t" against a billion-row history).
   *
   * Float discipline: all money flows as DECIMAL(18,4) sums (cumulated
   * in decimal, cast once per output cell); HHI share² terms cast
   * decimal(18,12) before the per-nation sum (the profile_entropy
-  * rule); mode and the point-in-time carry ride lexicographic struct
-  * max (== DuckDB struct_pack ordering, probed) — aggregates skip
-  * nulls in both engines, which is what makes the carry-forward
-  * union trick exact.
+  * rule); mode rides lexicographic struct max (== DuckDB struct_pack
+  * ordering, probed), and the point-in-time oracle's carry does too —
+  * aggregates skip nulls in both engines, which is what makes its
+  * carry-forward union trick exact.
   */
 object Extras12 {
-
-  /** PUBLIC API: merge-sorted point-in-time lookup — "value as of t"
-    * against a version history without a range join. `history` carries
-    * one version per row: `keyCol`, integral `tsCol` (version effective
-    * time), integral `tieCol` (unique within (key, ts) — ingestion id),
-    * plus any payload columns. `probes` carries (`keyCol`,
-    * `probeTsCol`). Probes are UNIONED into the version stream and one
-    * per-key carry-forward window (max over a struct that is NULL on
-    * probe rows — aggregates skip nulls) resolves each probe to the
-    * version in force at its t, inclusively (history sorts before
-    * probes at equal timestamps). Output: one row per probe with
-    * (`keyCol`, `probeTsCol`, `version`) where `version` is the struct
-    * (tsCol, tieCol, payload...) of the prevailing version — null when
-    * no version predates the probe. Cost: ONE shuffle of
-    * history+probes on the key; state one struct per row — the shape a
-    * billion-row history with a million probes pays unchanged. */
-  def pointInTimeLookup(history: DataFrame, probes: DataFrame,
-      keyCol: String, tsCol: String, tieCol: String,
-      probeTsCol: String): DataFrame = {
-    val payload = history.columns.toSeq
-      .filterNot(c => c == keyCol || c == tsCol || c == tieCol)
-    val verCols = (Seq(tsCol, tieCol) ++ payload).map(col)
-    val verType = org.apache.spark.sql.types.StructType(
-      history.select(verCols: _*).schema.fields)
-    val h = history.select(col(keyCol).as("__k"),
-      col(tsCol).cast(LongType).as("__ord"), lit(0).as("__p"),
-      col(tieCol).cast(LongType).as("__tie"),
-      struct(verCols: _*).as("__ver"),
-      lit(null).cast(LongType).as("__t"))
-    val p = probes.select(col(keyCol).as("__k"),
-      col(probeTsCol).cast(LongType).as("__ord"), lit(1).as("__p"),
-      lit(Long.MaxValue).as("__tie"),
-      lit(null).cast(verType).as("__ver"),
-      col(probeTsCol).cast(LongType).as("__t"))
-    val w = Window.partitionBy("__k").orderBy("__ord", "__p", "__tie")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    h.unionByName(p)
-      .withColumn("__cur", max(col("__ver")).over(w))
-      .where(col("__p") === 1)
-      .select(col("__k").as(keyCol), col("__t").as(probeTsCol),
-        col("__cur").as("version"))
-  }
 
   val queries: Map[String, Q] = Map(
 
@@ -138,13 +96,14 @@ object Extras12 {
     },
 
     // SCD2 point-in-time lookup, merge-sorted: probes (3 fixed
-    // timestamps per user) are UNIONED into the per-user version
-    // stream (each event sets the prevailing value) and one
-    // carry-forward window — max over a struct that is NULL on probe
-    // rows (aggregates skip nulls) — resolves every probe to the
-    // version in force at t. History rows sort before probes at equal
-    // timestamps (inclusive semantics). No range join, no per-probe
-    // history scan; users with no prior version yield nulls.
+    // timestamps per user) run as the left side of the one as-of kernel
+    // (GraftOps.asofJoin) against the per-user version stream (each
+    // event sets the prevailing value), so one carry-forward window
+    // resolves every probe to the version in force at t. History rows
+    // sort before probes at equal timestamps (inclusive semantics), and
+    // event_id, listed first in the payload, decides same-µs versions.
+    // No range join, no per-probe history scan; users with no prior
+    // version yield nulls.
     "join_scd2_pointintime" -> { (s, dir) =>
       val hist = Tables(s, dir, "events").select(
         col("user_id"), unix_micros(col("ts")).as("us"),
@@ -154,11 +113,12 @@ object Extras12 {
         .withColumn("t_s", explode(array(probeTs.map(d =>
           unix_timestamp(lit(d).cast("timestamp"))): _*)))
         .select(col("user_id"), (col("t_s") * 1000000L).as("t_us"))
-      pointInTimeLookup(hist, probes, "user_id", "us", "event_id", "t_us")
+      GraftOps.asofJoin(probes, hist, "user_id", "t_us", "us",
+          Seq("event_id", "value"))
         .select(col("user_id"),
           expr("t_us DIV 1000000").as("t_s"),
-          col("version.value").as("value_at"),
-          col("version.event_id").as("version_event_id"))
+          col("asof_value").as("value_at"),
+          col("asof_event_id").as("version_event_id"))
         .orderBy("user_id", "t_s")
     }
   )

@@ -22,30 +22,18 @@ object Extras28 {
 
     // as-of join WITH TOLERANCE (the pandas merge_asof / kdb aj knob):
     // each purchase takes its latest click at-or-before, but only
-    // within 1 h — older context is stale and must NOT attach. Same
-    // union + carry-forward window as join_asof (one shuffle, no join);
-    // the tolerance is a post-window null-out.
+    // within 1 h — older context is stale and must NOT attach. The one
+    // as-of kernel (GraftOps.asofJoin, as join_asof); the tolerance is a
+    // post-window null-out.
     "join_asof_tolerance" -> { (s, dir) =>
       val tol = 3600000000L // 1h in µs
-      val tagged = Tables(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("t"))
-        .where(col("event_type").isin("click", "purchase"))
-        .withColumn("side", when(col("event_type") === "click", 0).otherwise(1))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("t"), col("side"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      tagged
-        .withColumn("ct",
-          last(when(col("side") === 0, col("t")), ignoreNulls = true).over(w))
-        .withColumn("ci",
-          last(when(col("side") === 0, col("event_id")), ignoreNulls = true)
-            .over(w))
-        .where(col("side") === 1)
+      val (purchases, clicks) = Joins.purchasesAndClicks(s, dir)
+      val gap = col("t") - col("asof_t")
+      GraftOps.asofJoin(purchases, clicks, "user_id", "t", "t", Seq("event_id", "t"))
         .select(col("event_id").as("purchase_id"), col("user_id"),
           col("t").as("pt"),
-          when(col("t") - col("ct") <= tol, col("ci")).as("click_id"),
-          when(col("t") - col("ct") <= tol, col("t") - col("ct")).as("gap_us"))
+          when(gap <= tol, col("asof_event_id")).as("click_id"),
+          when(gap <= tol, gap).as("gap_us"))
         .orderBy(col("purchase_id"))
     },
 

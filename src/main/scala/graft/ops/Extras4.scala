@@ -268,20 +268,25 @@ object Extras4 {
   }
 
   /** PUBLIC API: apply a change feed over a base table, keeping the
-    * highest-`versionCol` row per `keyCol`. ONE hash aggregate —
-    * `max_by(payload struct, version)` with map-side partial agg — so it
-    * costs a single shuffle on the key, no window, no sort. A (key,
-    * version) tie with different payloads is resolved ARBITRARILY (max_by
-    * keeps whichever row it meets first) — versions must be unique per key
-    * (a commit LSN/timestamp) for deterministic CDC semantics. */
+    * highest-`versionCol` row per `keyCol`. ONE aggregate —
+    * `max_by(row struct, (version, orderable payload…))` with map-side
+    * partial agg — so it costs a single shuffle on the key, no window
+    * (struct buffers make Spark plan it as a SortAggregate). A (key,
+    * version) tie keeps the row with the largest orderable payload in
+    * column order (nulls first; DedupByKey's rule), so the result never
+    * depends on arrival order; non-orderable payload columns (maps) ride
+    * in the row struct only. */
   def upsertLatestWins(base: DataFrame, changes: DataFrame,
       keyCol: String, versionCol: String): DataFrame = {
-    val payload = base.columns.filter(c => c != keyCol && c != versionCol)
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    val payload = base.columns.toSeq.filter(c => c != keyCol && c != versionCol)
+    val orderable = payload.filter(c => RowOrdering.isOrderable(base.schema(c).dataType))
+    val rowCols = payload :+ versionCol
     base.unionByName(changes)
       .groupBy(col(keyCol))
-      .agg(max_by(struct(payload.map(col): _*), col(versionCol)).as("_r"),
-        max(col(versionCol)).as(versionCol))
-      .select(col(keyCol) +: payload.map(c => col(s"_r.$c").as(c)) :+ col(versionCol): _*)
+      .agg(max_by(struct(rowCols.map(col): _*),
+        struct((versionCol +: orderable).map(col): _*)).as("_r"))
+      .select(col(keyCol) +: rowCols.map(c => col(s"_r.$c").as(c)): _*)
   }
 
   val oracle: Map[String, String] = Map(

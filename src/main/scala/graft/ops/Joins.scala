@@ -17,8 +17,9 @@ import org.apache.spark.sql.expressions.Window
   *    equi-join on (user, bucket) + residual filter. At 1000 executors this
   *    shuffles on a dense composite key instead of relying on per-user
   *    quadratic blow-up.
-  *  - `join_asof` is the union/window trick: one shuffle on user_id, one
-  *    sort — no join at all (Spark has no native as-of join).
+  *  - `join_asof` is the union/window trick of [[asofJoin]]: one shuffle
+  *    on user_id, one sort — no join at all (Spark has no native as-of
+  *    join).
   */
 object Joins {
 
@@ -26,6 +27,18 @@ object Joins {
 
   /** per-invocation suffix for join_lateral_topn's short-lived temp views. */
   private val lateralSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** (purchases, clicks) of the events table as (user_id, event_id, t µs)
+    * — the two sides of the as-of queries. */
+  private[ops] def purchasesAndClicks(s: org.apache.spark.sql.SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val ev = Tables(s, dir, "events")
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        unix_micros(col("ts")).as("t"))
+    def side(eventType: String) = ev.where(col("event_type") === eventType)
+      .select(col("user_id"), col("event_id"), col("t"))
+    (side("purchase"), side("click"))
+  }
 
   val queries: Map[String, Q] = Map(
     "join_inner_hash" -> { (s, dir) =>
@@ -98,28 +111,17 @@ object Joins {
         .orderBy(col("user_id"))
     },
 
-    // As-of join without a native operator: union both sides with a tag,
-    // one window pass carries the latest click at-or-before each purchase.
-    // Residual cross-engine hazard: if two clicks of one user shared the
-    // same µs timestamp, Spark deterministically keeps the larger event_id
-    // while DuckDB's ASOF picks arbitrarily — accepted because the events
-    // table carries ns-unique timestamps (collision odds ~1e-9).
+    // As-of join through the one kernel (GraftOps.asofJoin): each
+    // purchase carries the latest click at-or-before it. Clicks of one
+    // user at the same µs tie-break to the larger event_id (payload
+    // order), while DuckDB's ASOF picks arbitrarily — accepted because
+    // the events table carries ns-unique timestamps (collision odds ~1e-9).
     "join_asof" -> { (s, dir) =>
-      val ev = Tables(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("t"))
-      val tagged = ev
-        .where(col("event_type").isin("click", "purchase"))
-        .withColumn("side", when(col("event_type") === "click", 0).otherwise(1))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("t"), col("side"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      tagged
-        .withColumn("click_t", last(when(col("side") === 0, col("t")), ignoreNulls = true).over(w))
-        .withColumn("click_id", last(when(col("side") === 0, col("event_id")), ignoreNulls = true).over(w))
-        .where(col("side") === 1)
+      val (purchases, clicks) = purchasesAndClicks(s, dir)
+      GraftOps.asofJoin(purchases, clicks, "user_id", "t", "t", Seq("event_id", "t"))
         .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("t").as("pt"), col("click_id"), col("click_t"))
+          col("t").as("pt"), col("asof_event_id").as("click_id"),
+          col("asof_t").as("click_t"))
         .orderBy(col("purchase_id"))
     },
 
@@ -307,27 +309,31 @@ object Joins {
   )
 
   /** PUBLIC API: as-of join — each left row gains the latest right-side
-    * payload whose `rightTime` ≤ its `leftTime`, per `keyCol` (the
-    * join_asof query parameterized over caller DataFrames). No native
-    * Spark operator exists: both sides union with a side tag and ONE
-    * window pass over (key, time) carries the payload forward — one
-    * shuffle, no range join, state one row per key. A right row at
-    * exactly `leftTime` matches (side 0 sorts before side 1). Unmatched
-    * left rows keep NULL payloads. The payload travels as ONE struct, so
-    * the matched columns always come from the SAME right row — even when
-    * that row carries NULL fields (a per-column `last(ignoreNulls)` would
-    * resurrect older non-null values and stitch columns from different
-    * rows). Among right rows sharing one (key, time) µs the carried row
-    * is arbitrary — callers needing total determinism must make times
-    * unique per key. NULL keys: matching runs through a window
-    * PARTITIONED on `keyCol`, so NULL keys group TOGETHER — a NULL-key
-    * left row picks up the latest NULL-key right payload (null-safe
-    * `<=>` semantics, NOT the equi-join rule where NULL never matches);
-    * pre-filter NULL keys for equi-join behaviour. Output column names
-    * `asof_<payload>`; `__t`/`__side`/`__r`/`asof_*` are reserved and
-    * must not exist on EITHER input. */
+    * payload whose `rightTime` ≤ its `leftTime`, per `keyCol`; the one
+    * as-of kernel (join_asof, join_asof_tolerance and
+    * join_scd2_pointintime run through it). No native Spark operator
+    * exists: both sides union with a side tag and ONE window pass over
+    * (key, time) carries the payload forward — one shuffle, no range
+    * join, state one row per key. A right row at exactly `leftTime`
+    * matches (side 0 sorts before side 1). Unmatched left rows keep NULL
+    * payloads. The payload travels as ONE struct, so the matched columns
+    * always come from the SAME right row — even when that row carries
+    * NULL fields (a per-column `last(ignoreNulls)` would resurrect older
+    * non-null values and stitch columns from different rows). Ties are
+    * deterministic: among right rows sharing one (key, time) the window
+    * sorts by the orderable payload fields in `payloadCols` order (nulls
+    * first), so the largest payload wins — list an ingestion id first to
+    * let it decide. Non-orderable fields (maps) still ride in the struct
+    * but take no part in the order. NULL keys: matching runs through a
+    * window PARTITIONED on `keyCol`, so NULL keys group TOGETHER — a
+    * NULL-key left row picks up the latest NULL-key right payload
+    * (null-safe `<=>` semantics, NOT the equi-join rule where NULL never
+    * matches); pre-filter NULL keys for equi-join behaviour. Output column
+    * names `asof_<payload>`; `__t`/`__side`/`__r`/`asof_*` are reserved
+    * and must not exist on EITHER input. */
   def asofJoin(left: DataFrame, right: DataFrame, keyCol: String,
       leftTime: String, rightTime: String, payloadCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
     val reserved = Seq("__t", "__side", "__r", "__asof") ++ payloadCols.map(c => s"asof_$c")
     require(!left.columns.exists(reserved.contains),
       s"left input carries a reserved asofJoin column (${reserved.mkString(", ")})")
@@ -343,7 +349,12 @@ object Joins {
       lit(0).as("__side") +: lCols.map(c =>
         lit(null).cast(left.schema(c).dataType).as(c)) :+
       struct(payloadCols.map(col): _*).as("__r"): _*)
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("__t"), col("__side"))
+    // total order among same-(key, time) right rows: the carried row is
+    // the LAST one, so it must not depend on the shuffle's arrival order
+    val ties = rStructT.fields.toSeq.filter(f => RowOrdering.isOrderable(f.dataType))
+      .map(f => col("__r").getField(f.name))
+    val w = Window.partitionBy(col(keyCol))
+      .orderBy(col("__t") +: col("__side") +: ties: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     l2.unionByName(r2)
       .withColumn("__asof", last(col("__r"), ignoreNulls = true).over(w))

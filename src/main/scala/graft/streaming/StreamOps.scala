@@ -166,7 +166,8 @@ object StreamOps {
     *     in production the fence lives in the sink's own transaction,
     *     e.g. `(table, batchId)` committed atomically with the data).
     *  2. ALGEBRAIC IDEMPOTENCE: the merge itself is latest-wins-per-key
-    *     ([[GraftOps.upsertLatestWins]] — max_by over a UNIQUE version),
+    *     ([[GraftOps.upsertLatestWins]] — max_by over (version, payload),
+    *     so version ties resolve the same way on every application),
     *     so even a re-applied epoch (fence lost, e.g. sink state rebuilt
     *     from an older snapshot) converges to the same table: upsert of
     *     rows already reflected changes nothing.

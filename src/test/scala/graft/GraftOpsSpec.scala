@@ -224,6 +224,23 @@ class GraftOpsSpec extends SparkSuite {
     // (2, t=5) has no quote at-or-before → NULL
     assert(out.toSeq == Seq((1L, 3L, Some(100.0)), (1L, 10L, Some(200.0)),
       (2L, 5L, None)))
+    // same-(key, time) quotes: the largest payload in payloadCols order
+    // wins whatever the arrival order; a map field rides along unordered
+    val tied = Seq((1L, 9L, 150.0, "b"), (1L, 9L, 250.0, "a"), (1L, 9L, 250.0, "c"),
+      (2L, 5L, 300.0, "z"))
+      .toDF("user", "qt", "price", "src")
+      .withColumn("attrs", map(lit("src"), col("src")))
+    Seq(1, 4).foreach { parts =>
+      val got = GraftOps.asofJoin(purchases, tied.repartition(parts), "user", "pt",
+          "qt", Seq("price", "src", "attrs"))
+        .orderBy("user", "pt").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          Option(r.getAs[String]("asof_src")),
+          Option(r.getAs[scala.collection.Map[String, String]]("asof_attrs"))
+            .map(_("src"))))
+      assert(got.toSeq == Seq((1L, 3L, None, None), (1L, 10L, Some("c"), Some("c")),
+        (2L, 5L, Some("z"), Some("z"))), s"$parts partitions")
+    }
   }
 
   test("validate counts violations per declarative rule on user data") {

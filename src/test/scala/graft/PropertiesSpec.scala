@@ -131,28 +131,48 @@ object CleanOpsProps extends Properties("CleanOps") {
   property("upsertLatestWins: highest version wins, inserts appear, base survives") =
     Prop.forAll(
       // change keys 0..9 over base keys 0..6, so keys 7..9 exercise the
-      // true-insert branch (absent from base)
-      Gen.listOfN(10, Gen.zip(Gen.choose(0L, 9L), Gen.choose(2L, 9L), Gen.choose(0, 99)))
+      // true-insert branch (absent from base); versions 2..4 make
+      // (key, version) ties common, and a tie must keep the larger payload
+      Gen.listOfN(10, Gen.zip(Gen.choose(0L, 9L), Gen.choose(2L, 4L), Gen.choose(0, 99)))
     ) { chg =>
       val base = (0L to 6L).map(k => (k, k * 10, 1L))
       val changes = chg.map { case (k, v, x) => (k, x.toLong, v) }
       val df = GraftOps.upsertLatestWins(
-        base.toDF("key", "x", "version"), changes.toDF("key", "x", "version"),
-        "key", "version")
+        base.toDF("key", "x", "version"),
+        changes.toDF("key", "x", "version").repartition(3), "key", "version")
       val got = df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       val expected = base.map { case (k, x, v) => k -> (x, v) }.toMap ++
         changes.groupBy(_._1).view.mapValues { rows =>
           val (_, x, v) = rows.maxBy(r => (r._3, r._2))
           (x, v)
         }.toMap
-      // versions always match; payload matches wherever the winning version
-      // is unique (ties are documented as arbitrary)
-      got.keySet == expected.keySet && got.forall { case (k, (_, v)) => expected(k)._2 == v } && {
-        val uniq = changes.groupBy(_._1).filter { case (_, rows) =>
-          rows.count(_._3 == rows.map(_._3).max) == 1
-        }.keySet
-        uniq.forall(k => got(k) == expected(k))
-      }
+      got == expected
+    }
+
+  property("asofJoin == brute-force latest-at-or-before model (null keys, same-time ties)") =
+    Prop.forAll(
+      Gen.listOfN(12, Gen.zip(Gen.option(Gen.choose(0L, 2L)), Gen.choose(0L, 5L))),
+      Gen.listOfN(14, Gen.zip(Gen.option(Gen.choose(0L, 2L)), Gen.choose(0L, 5L),
+        Gen.choose(0, 3), Gen.option(Gen.oneOf("a", "b"))))
+    ) { (lefts, rights) =>
+      // model: per left row, the right rows of the SAME key (NULL keys
+      // group together) with time <= the left time; the largest
+      // (time, x, y) wins, None sorting first — the kernel's total order
+      val model = lefts.zipWithIndex.map { case ((k, t), id) =>
+        val in = rights.filter(r => r._1 == k && r._2 <= t)
+        id.toLong -> (if (in.isEmpty) None
+          else Some(in.maxBy(r => (r._2, r._3, r._4)) match {
+            case (_, _, x, y) => (x, y) }))
+      }.toMap
+      val left = lefts.zipWithIndex.map { case ((k, t), id) => (id.toLong, k, t) }
+        .toDF("id", "k", "lt")
+      val right = rights.toDF("k", "rt", "x", "y").repartition(3)
+      val got = GraftOps.asofJoin(left, right, "k", "lt", "rt", Seq("x", "y"))
+        .collect().map { r =>
+          r.getAs[Long]("id") -> (if (r.isNullAt(r.fieldIndex("asof_x"))) None
+            else Some((r.getAs[Int]("asof_x"), Option(r.getAs[String]("asof_y")))))
+        }.toMap
+      got == model
     }
 }
 

@@ -722,16 +722,16 @@ class Round8eSpec extends SparkSuite {
     assert(r.getLong(5) >= 0L && r.getLong(5) <= nUsers)
   }
 
-  test("pointInTimeLookup API: hand-built history resolves exactly") {
+  test("asofJoin point-in-time lookup: hand-built history resolves exactly") {
     import spark.implicits._
     val hist = Seq(
       (1L, 10L, 100L, "v1"), (1L, 20L, 101L, "v2"), (1L, 20L, 102L, "v2b"),
       (2L, 50L, 200L, "w1")).toDF("k", "ts", "tie", "payload")
     val probes = Seq((1L, 5L), (1L, 10L), (1L, 20L), (1L, 99L), (2L, 49L),
       (3L, 10L)).toDF("k", "t")
-    val out = GraftOps.pointInTimeLookup(hist, probes, "k", "ts", "tie", "t")
-      .select(col("k"), col("t"), col("version.payload"),
-        col("version.tie")).collect()
+    // the ingestion id listed first decides versions sharing a timestamp
+    val out = GraftOps.asofJoin(probes, hist, "k", "t", "ts", Seq("tie", "payload"))
+      .select(col("k"), col("t"), col("asof_payload"), col("asof_tie")).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (if (r.isNullAt(2)) null else r.getString(2))).toMap
     assert(out((1L, 5L)) == null, "probe before any version")
