@@ -103,18 +103,23 @@ object GraftOps {
 
   // ---- corpus maintenance --------------------------------------------------
 
-  /** dedup a NEW batch against an EXISTING corpus: per-increment cost ∝
-    * |batch| — the corpus contributes only its LSH band signatures (4 tiny
-    * rows/doc; precompute and store them for repeated increments). Returns
-    * the batch rows that do not near-duplicate (Jaccard ≥ threshold) any
-    * corpus doc. Batch-internal dups are out of scope — run [[dedupCorpus]]
-    * over the batch first if arrivals can self-duplicate. */
+  /** dedup a NEW batch against an EXISTING corpus: the batch rows that do
+    * not near-duplicate (Jaccard ≥ threshold) any corpus doc. The call runs
+    * its reject pass once, at call time, and returns batch ⋈ a
+    * checkpointed set of rejected ids, so reusing the result re-runs
+    * nothing corpus-sized. Each call still shingles the whole corpus;
+    * repeated increments against one corpus hold its shingle arrays and
+    * enter at [[llm.Curation.incrementalRejects]]. Batch-internal dups are
+    * out of scope — run [[dedupCorpus]] over the batch first if arrivals
+    * can self-duplicate. */
   def dedupIncremental(corpus: DataFrame, batch: DataFrame, idCol: String,
       textCol: String, threshold: Double, n: Int = 3): DataFrame =
     llm.Curation.dedupIncremental(corpus, batch, idCol, textCol, threshold, n)
 
   /** benchmark decontamination: (id, n_shared) for corpus docs sharing ≥1
-    * word-n-gram with the (benchmark-sized, broadcast) eval set. */
+    * word-n-gram with the (benchmark-sized, broadcast) eval set. The call
+    * runs its flag pass once, at call time, and returns those rows
+    * checkpointed; each call still shingles the corpus and the eval set. */
   def decontaminate(corpus: DataFrame, evalSet: DataFrame, idCol: String,
       textCol: String, n: Int = 8): DataFrame =
     llm.Curation.decontaminate(corpus, evalSet, idCol, textCol, n)

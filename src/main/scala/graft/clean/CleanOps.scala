@@ -274,9 +274,11 @@ final case class DedupByKey(keys: Seq[String], order: Seq[String]) extends Clean
     s"""df.groupBy(${keys.mkString(",")}).agg(min(struct(${order.mkString(",")}, *rest))).select(unpacked)  // keep-first by order"""
 }
 
-/** Clip (winsorize) into the [pLo, pHi] exact-percentile range.
-  * Bounds are rounded to 4 decimals so both engines in a differential test
-  * compare against the identical double. */
+/** Clip (winsorize) into the [pLo, pHi] exact-percentile range; a null
+  * stays null (`greatest`/`least` skip nulls, so unguarded they would turn
+  * a missing value into the lower bound). Bounds are rounded to 4
+  * decimals so both engines in a differential test compare against the
+  * identical double. */
 final case class ClipToQuantiles(column: String, pLo: Double, pHi: Double)
     extends CleanOp {
   def apply(df: DataFrame): DataFrame = {
@@ -284,8 +286,8 @@ final case class ClipToQuantiles(column: String, pLo: Double, pHi: Double)
       round(expr(s"percentile($column, $pLo)"), 4).as("__graft_lo"),
       round(expr(s"percentile($column, $pHi)"), 4).as("__graft_hi"))
     CleanOp.withScalarStats(df, stats)
-      .withColumn(column,
-        least(greatest(col(column), col("__graft_lo")), col("__graft_hi")))
+      .withColumn(column, when(col(column).isNotNull,
+        least(greatest(col(column), col("__graft_lo")), col("__graft_hi"))))
       .drop("__graft_lo", "__graft_hi")
   }
   def code: String = s"""df.withColumn("$column", least(greatest(col, p$pLo), p$pHi))"""

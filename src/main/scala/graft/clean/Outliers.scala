@@ -168,7 +168,8 @@ object Outliers {
       """WITH qs AS (SELECT round(quantile_cont(l_extendedprice, 0.01), 4) AS lo,
         |  round(quantile_cont(l_extendedprice, 0.99), 4) AS hi FROM lineitem)
         |SELECT l_orderkey, l_linenumber,
-        |least(greatest(l_extendedprice, lo), hi) AS clipped
+        |CASE WHEN l_extendedprice IS NOT NULL
+        |  THEN least(greatest(l_extendedprice, lo), hi) END AS clipped
         |FROM lineitem CROSS JOIN qs
         |ORDER BY l_orderkey, l_linenumber, clipped""".stripMargin,
     "outlier_remove" ->

@@ -49,7 +49,8 @@ object RecipeQueries {
          |bounds AS (SELECT round(quantile_cont(v, 0.01), 4) AS lo,
          |                  round(quantile_cont(v, 0.99), 4) AS hi FROM filled),
          |clipped AS (SELECT event_id, user_id, et,
-         |  least(greatest(v, lo), hi) AS v FROM filled CROSS JOIN bounds),
+         |  CASE WHEN v IS NOT NULL THEN least(greatest(v, lo), hi) END AS v
+         |  FROM filled CROSS JOIN bounds),
          |dropped AS (SELECT * FROM clipped WHERE et IS NOT NULL),
          |deduped AS (SELECT event_id, user_id, v, et FROM (
          |  SELECT *, row_number() OVER (PARTITION BY event_id

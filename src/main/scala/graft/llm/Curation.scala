@@ -44,33 +44,37 @@ object Curation {
   /** PUBLIC API: dedup a new `batch` against an existing `corpus` — both
     * carry (`idCol`, `textCol`); returns the batch rows that are NOT a
     * near-duplicate (n-gram Jaccard ≥ `threshold`) of any corpus doc.
-    * Corpus-side inputs to the candidate join are the LSH band signatures
-    * only; a production pipeline precomputes and stores them once per
-    * corpus (they are 4 rows of (id, band, sig) per doc), making each
-    * increment's cost ∝ |batch|. Batch-batch duplicates are intentionally
-    * NOT examined here — run [[Dedup.dedupCorpus]] over the batch first if
-    * arrivals can self-duplicate.
+    * Batch-batch duplicates are intentionally NOT examined here — run
+    * [[Dedup.dedupCorpus]] over the batch first if arrivals can
+    * self-duplicate.
     *
-    * COST NOTE: this convenience form re-shingles `corpus` on every call
-    * (twice: signature pass + verify pass) — fine for one-shot increments,
-    * wrong in a loop. Repeated increments hold the corpus arrays
-    * (cached/stored) and enter at [[incrementalRejects]], as the declared
-    * query and [[graft.streaming.StreamOps.incrementalDedupBatches]] do —
-    * that path never re-shingles the corpus. */
+    * The call runs the reject pass once, at call time: it shingles the
+    * corpus and the batch, band-joins and verifies them
+    * ([[incrementalRejects]]) and `localCheckpoint`s the small set of
+    * rejected batch ids. It returns batch ⋈ that checkpointed id set, so
+    * every later action on the result, however often a plan refers to it,
+    * reads the batch and the id set only. Each call still shingles the
+    * whole corpus once; repeated increments against one corpus hold the
+    * corpus arrays themselves and enter at [[incrementalRejects]], as the
+    * declared query and
+    * [[graft.streaming.StreamOps.incrementalDedupBatches]] do. The id set
+    * lives in executor blocks (not the CacheManager): losing them fails
+    * the next action with the missing block's name. */
   def dedupIncremental(corpus: DataFrame, batch: DataFrame, idCol: String,
       textCol: String, threshold: Double, n: Int = 3): DataFrame = {
     val rejected = incrementalRejects(
       Dedup.shingleArrays(corpus, idCol, textCol, n, dedup = true),
       Dedup.shingleArrays(batch, idCol, textCol, n, dedup = true), threshold)
+      .localCheckpoint()
     batch.join(rejected.withColumnRenamed("doc_id", idCol), Seq(idCol), "left_anti")
   }
 
   /** array-shape kernel of [[dedupIncremental]]: corpus/batch DISTINCT
     * shingle arrays ((doc_id, sh), [[Dedup.shingleArrays]] dedup=true) →
-    * (doc_id) of batch docs near-duplicating some corpus doc. Callers that
-    * already hold (or cache/store) the arrays enter here so the shingle
-    * pass runs once — the declared query reuses the per-(session, dir)
-    * cached corpus arrays this way. */
+    * (doc_id) of batch docs near-duplicating some corpus doc. Lazy:
+    * callers that already hold (or cache/store) the arrays enter here so
+    * the shingle pass runs once — the declared query reuses the
+    * per-(session, dir) cached corpus arrays this way. */
   def incrementalRejects(ca: DataFrame, ba: DataFrame,
       threshold: Double): DataFrame = {
     // doc_a = batch, doc_b = corpus
@@ -81,13 +85,25 @@ object Curation {
 
   /** PUBLIC API: flag docs in `corpus` sharing at least one word-`n`-gram
     * with any doc in `evalSet` (benchmark decontamination). Returns
-    * (`idCol`, n_shared = distinct shared n-grams). The eval n-gram set is
-    * broadcast — callers own that the eval side is benchmark-sized; the
-    * corpus side never shuffles before the per-doc count. For an
-    * adversarially large eval set, drop to a shuffle semi-join on a
-    * 64-bit n-gram hash ([[Dedup.shingleId]]) instead. */
+    * (`idCol`, n_shared = distinct shared n-grams). The flag pass
+    * ([[contaminationCounts]]) runs once, at call time, and its small
+    * result comes back `localCheckpoint`ed: later actions read those rows
+    * only, and never re-shingle the corpus or the eval set. Each call
+    * shingles both once. The rows live in executor blocks (not the
+    * CacheManager): losing them fails the next action with the missing
+    * block's name. */
   def decontaminate(corpus: DataFrame, evalSet: DataFrame, idCol: String,
-      textCol: String, n: Int = 8): DataFrame = {
+      textCol: String, n: Int = 8): DataFrame =
+    contaminationCounts(corpus, evalSet, idCol, textCol, n).localCheckpoint()
+
+  /** lazy kernel of [[decontaminate]], which the declared queries compose
+    * into one plan. The eval n-gram set is broadcast — callers own that
+    * the eval side is benchmark-sized; the corpus side never shuffles
+    * before the per-doc count. For an adversarially large eval set, drop
+    * to a shuffle semi-join on a 64-bit n-gram hash ([[Dedup.shingleId]])
+    * instead. */
+  private[llm] def contaminationCounts(corpus: DataFrame, evalSet: DataFrame,
+      idCol: String, textCol: String, n: Int): DataFrame = {
     val ev = Dedup.shingleSet(evalSet, idCol, textCol, n)
       .select(col("bg")).distinct()
     Dedup.shingleSet(corpus, idCol, textCol, n)
@@ -264,7 +280,7 @@ object Curation {
     // a corpus doc sharing ANY 8-gram with the eval set is contaminated.
     "text_decontaminate" -> { (s, dir) =>
       val docs = Tables(s, dir, "documents")
-      decontaminate(docs.where(col("doc_id") % 5 =!= 0),
+      contaminationCounts(docs.where(col("doc_id") % 5 =!= 0),
           docs.where(col("doc_id") % 5 === 0), "doc_id", "text", 8)
         .orderBy(col("doc_id"))
     },
@@ -282,7 +298,7 @@ object Curation {
       val evalSet = docs.where(col("doc_id") % 5 === 0)
       val bl = decontaminateBloom(corpus, evalSet, "doc_id", "text", 8)
         .select(col("doc_id"), lit(1).as("b"))
-      val ex = decontaminate(corpus, evalSet, "doc_id", "text", 8)
+      val ex = contaminationCounts(corpus, evalSet, "doc_id", "text", 8)
         .select(col("doc_id"), lit(1).as("e"))
       // ONE full-outer compare evaluates each pipeline once (the
       // anti-join-per-count draft re-ran the exact pass 3× and the

@@ -88,6 +88,15 @@ class CleanOpsSpec extends SparkSuite {
     assert(out.getDouble(0) > 1.0 && out.getDouble(1) < 100.0) // actually clipped
   }
 
+  test("ClipToQuantiles keeps a null null instead of clipping it to the lower bound") {
+    // greatest/least skip nulls: unguarded, the null row came back as lo = 3.0
+    val df = Seq((1, Some(1e15)), (2, Some(2e15)), (3, None), (4, Some(3.0)))
+      .toDF("id", "x")
+    val got = ClipToQuantiles("x", 0.0, 1.0)(df).orderBy("id").collect()
+      .map(r => Option(r.getAs[java.lang.Double]("x")).map(_.doubleValue)).toSeq
+    assert(got == Seq(Some(1e15), Some(2e15), None, Some(3.0)), s"got $got")
+  }
+
   test("FingerprintCanonicalize maps token-permuted/case variants to one value") {
     val df = Seq(" Foo Bar", "foo  bar", "FOO BAR", "bar foo", "baz").toDF("c")
     val out = FingerprintCanonicalize("c")(df)

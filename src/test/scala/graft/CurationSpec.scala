@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.spark.SparkEnv
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Generate
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheBridge
 
 /** Corpus-maintenance APIs (llm.Curation) on USER DataFrames, plus
   * semantic checks on the two-stage quantized ANN declared query. */
@@ -46,6 +52,62 @@ class CurationSpec extends SparkSuite {
     // doc 1 shares the first 29 tokens → 22 of its 23 8-grams
     assert(hits.keySet == Set(1L), s"expected only doc 1 flagged, got $hits")
     assert(hits(1L) == 22L, s"expected 22 shared 8-grams, got ${hits(1L)}")
+  }
+
+  /** corpus and eval set cached the way a long-lived session holds them,
+    * and a batch with one corpus near-dup (10), one novel doc (11) and one
+    * doc that shares 8-grams with the eval set (12) */
+  private def withIngestInputs(body: (DataFrame, DataFrame, DataFrame) => Unit): Unit = {
+    val alt = "red orange yellow green blue indigo violet white black grey " +
+      "gold silver bronze copper iron tin lead zinc nickel chrome"
+    val evalText = "one two three four five six seven eight nine ten eleven twelve"
+    val corpus = Seq((1L, base), (2L, alt)).toDF("id", "body").cache()
+    val evalSet = Seq((100L, evalText)).toDF("id", "body").cache()
+    val batch = Seq((10L, base.stripSuffix("vav") + "zayin"),
+      (11L, "cat dog bird fish horse cow sheep goat duck hen swan crow"),
+      (12L, evalText + " thirteen")).toDF("id", "body")
+    try { corpus.count(); evalSet.count(); body(corpus, evalSet, batch) }
+    finally { corpus.unpersist(); evalSet.unpersist() }
+  }
+
+  private def msgs(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+
+  test("dedupIncremental and decontaminate return the batch plus a checkpointed leaf, caching nothing") {
+    withIngestInputs { (corpus, evalSet, batch) =>
+      def cached = CacheBridge.numCachedEntries(spark)
+      val before = cached
+      (1 to 5).foreach { _ =>
+        val kept = GraftOps.dedupIncremental(corpus, batch, "id", "body", 0.3)
+        val hits = GraftOps.decontaminate(batch, evalSet, "id", "body", 8)
+        Seq(kept, hits).foreach { df =>
+          // no shingle explode, no read of the cached corpus or eval set:
+          // the corpus-side pass ran at call time and left one local leaf
+          val p = df.queryExecution.optimizedPlan
+          assert(p.collect { case g: Generate => g }.isEmpty, s"re-plans a shingle pass:\n$p")
+          assert(p.collect { case r: InMemoryRelation => r }.isEmpty,
+            s"reads the corpus or eval relation:\n$p")
+          assert(p.collect { case r: LogicalRDD => r }.size == 1, s"no checkpointed leaf:\n$p")
+        }
+        assert(kept.select("id").collect().map(_.getLong(0)).toSet == Set(11L, 12L))
+        assert(hits.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((12L, 5L)))
+      }
+      assert(cached == before, "the calls registered relations with the CacheManager")
+    }
+  }
+
+  test("losing the checkpointed id set fails the next action naming the block") {
+    withIngestInputs { (corpus, evalSet, batch) =>
+      Seq(GraftOps.dedupIncremental(corpus, batch, "id", "body", 0.3),
+          GraftOps.decontaminate(batch, evalSet, "id", "body", 8)).foreach { df =>
+        val rdd = df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+          .getOrElse(fail(s"no checkpointed leaf in\n${df.queryExecution.analyzed}"))
+        assert(rdd.partitions.nonEmpty)
+        SparkEnv.get.blockManager.removeRdd(rdd.id)
+        val e = intercept[Exception](df.collect())
+        assert(msgs(e).exists(_.contains(s"rdd_${rdd.id}_")), e.toString)
+      }
+    }
   }
 
   test("incrementalDedupBatches: continuous ingestion drops near-dups across batches") {
@@ -140,8 +202,6 @@ class CurationSpec extends SparkSuite {
     val e = intercept[Exception] {
       GraftOps.withInt8Quantization(bad).collect()
     }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.contains("all-zero vector")), e.toString)
   }
 
